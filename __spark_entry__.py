@@ -2356,7 +2356,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rfc3986_normalize_expr) — the URL-identity pass before the Q1
         # seen-check. Six rotating spellings exercise scheme/host case,
         # default ports both schemes, userinfo preservation, empty-path,
-        # unreserved decode, hex-case fold, and malformed-% passthrough.
+        # unreserved decode (in the host too: lowered after decoding),
+        # hex-case fold, and malformed-% passthrough.
         from go_crawler_spark.functions.urls import rfc3986_normalize_expr
 
         docs = _t(spark, sf, "documents")
@@ -2385,7 +2386,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             .when(
                 F.col("doc_id") % 6 == 3,
-                F.concat(F.lit("http://"), F.col("source"), F.lit("-site.org")),
+                F.concat(F.lit("http://"), F.col("source"), F.lit("-s%49te.org")),
             )
             .when(
                 F.col("doc_id") % 6 == 4,
@@ -2931,7 +2932,8 @@ def oracle_sql() -> dict[str, str]:
                 'com,example,' || source || ')/doc' || CAST(doc_id AS VARCHAR) AS surt_key
               FROM documents)
             SELECT surt_key, ts14,
-                   surt_key || ' ' || ts14 || ' {"url": "' || url
+                   surt_key || ' ' || ts14 || ' {"url": "'
+                     || replace(replace(url, '\\', '\\\\'), '"', '\\"')
                      || '", "digest": "' || digest
                      || '", "length": ' || CAST(len_b AS VARCHAR) || '}'
                      AS cdxj
@@ -5011,16 +5013,36 @@ def oracle_sql() -> dict[str, str]:
                   WHEN 0 THEN 'HTTP://' || upper(source) || '-Site.ORG:80/%7euser/' || CAST(doc_id AS VARCHAR)
                   WHEN 1 THEN 'https://' || source || '-site.org:443/p%3a' || CAST(doc_id AS VARCHAR)
                   WHEN 2 THEN 'https://User@' || source || '-SITE.org/A%2Fb?x=%2a' || CAST(doc_id AS VARCHAR)
-                  WHEN 3 THEN 'http://' || source || '-site.org'
+                  WHEN 3 THEN 'http://' || source || '-s%49te.org'
                   WHEN 4 THEN 'http://' || source || '-site.org/%41%7A/' || CAST(doc_id AS VARCHAR)
                   ELSE 'http://' || source || '-site.org/100%25%'
                 END AS u
               FROM documents),
+            q1 AS (SELECT doc_id, str_split(u, '%') AS parts FROM raw),
+            q2 AS (
+              SELECT doc_id, parts[1] AS head,
+                list_transform(parts[2:], p -> struct_pack(
+                  p := p,
+                  hx := substr(p, 1, 2),
+                  ok := regexp_matches(substr(p, 1, 2), '^[0-9A-Fa-f]{2}$'),
+                  code := (strpos('0123456789abcdef', substr(lower(substr(p, 1, 2)), 1, 1)) - 1) * 16
+                        + (strpos('0123456789abcdef', substr(lower(substr(p, 1, 2)), 2, 1)) - 1)
+                )) AS fx
+              FROM q1),
+            dec AS (
+              SELECT doc_id,
+                head || coalesce(array_to_string(list_transform(fx, s -> CASE
+                   WHEN s.ok AND (s.code BETWEEN 48 AND 57 OR s.code BETWEEN 65 AND 90
+                                  OR s.code BETWEEN 97 AND 122 OR s.code IN (45, 46, 95, 126))
+                     THEN chr(CAST(s.code AS INT)) || substr(s.p, 3)
+                   WHEN s.ok THEN '%' || upper(s.hx) || substr(s.p, 3)
+                   ELSE '%' || s.p END), ''), '') AS u
+              FROM q2),
             p1 AS (
               SELECT doc_id, u,
                      regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.\-]*)://', 1) AS sch,
                      regexp_replace(u, '^[A-Za-z][A-Za-z0-9+.\-]*://', '') AS rest
-              FROM raw),
+              FROM dec),
             p2 AS (
               SELECT *, regexp_extract(rest, '^[^/?#]*', 0) AS auth,
                         lower(sch) AS sl
@@ -5029,7 +5051,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT *, substr(rest, length(auth) + 1) AS tl,
                      CASE WHEN contains(auth, '@')
                           THEN str_split(auth, '@')[1] || '@' ELSE '' END AS ui,
-                     lower(str_split(auth, '@')[-1]) AS hp
+                     str_split(auth, '@')[-1] AS hp
               FROM p2),
             p4 AS (
               SELECT *,
@@ -5041,28 +5063,19 @@ def oracle_sql() -> dict[str, str]:
                      ELSE tl END AS pq
               FROM p3),
             p5 AS (
-              SELECT doc_id,
-                CASE WHEN sch != '' THEN sl || '://' || ui || hp2 || pq ELSE u END AS v
-              FROM p4),
-            p6 AS (SELECT doc_id, str_split(v, '%') AS parts FROM p5),
-            p7 AS (
-              SELECT doc_id, parts[1] AS head,
-                list_transform(parts[2:], p -> struct_pack(
-                  p := p,
-                  hx := substr(p, 1, 2),
-                  ok := regexp_matches(substr(p, 1, 2), '^[0-9A-Fa-f]{2}$'),
-                  code := (strpos('0123456789abcdef', substr(lower(substr(p, 1, 2)), 1, 1)) - 1) * 16
-                        + (strpos('0123456789abcdef', substr(lower(substr(p, 1, 2)), 2, 1)) - 1)
-                )) AS fx
-              FROM p6)
+              -- host lowered AFTER decoding, the hex of its triplets kept
+              SELECT *,
+                lower(str_split(hp2, '%')[1])
+                  || coalesce(array_to_string(list_transform(str_split(hp2, '%')[2:],
+                       p -> '%' || CASE
+                         WHEN regexp_matches(substr(p, 1, 2), '^[0-9A-Fa-f]{2}$')
+                           THEN substr(p, 1, 2) || lower(substr(p, 3))
+                         ELSE lower(p) END), ''), '') AS hp3
+              FROM p4)
             SELECT doc_id,
-              head || coalesce(array_to_string(list_transform(fx, s -> CASE
-                 WHEN s.ok AND (s.code BETWEEN 48 AND 57 OR s.code BETWEEN 65 AND 90
-                                OR s.code BETWEEN 97 AND 122 OR s.code IN (45, 46, 95, 126))
-                   THEN chr(CAST(s.code AS INT)) || substr(s.p, 3)
-                 WHEN s.ok THEN '%' || upper(s.hx) || substr(s.p, 3)
-                 ELSE '%' || s.p END), ''), '') AS url_norm
-            FROM p7
+              CASE WHEN sch != '' THEN sl || '://' || ui || hp3 || pq ELSE u END
+                AS url_norm
+            FROM p5
         """,
         "conditional_fetch_actions": """
             WITH log AS (
@@ -5099,9 +5112,9 @@ def oracle_sql() -> dict[str, str]:
         "adaptive_politeness_delay": """
             SELECT source || CAST(doc_id % 7 AS VARCHAR) AS host,
                    count(*) AS n_obs,
-                   greatest(1000, least(2500,
+                   CAST(greatest(1000, least(2500,
                      (3 * sum((doc_id * 13) % 900 + 50 + (doc_id % 7) * 300))
-                       // (2 * count(*)))) AS delay_ms
+                       // (2 * count(*)))) AS BIGINT) AS delay_ms
             FROM documents
             GROUP BY 1
         """,

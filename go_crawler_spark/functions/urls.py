@@ -517,6 +517,28 @@ def pct_normalize_expr(url):
     return F.concat(head, F.array_join(F.transform(tail, _fix), ""))
 
 
+def _lower_keep_pct_expr(s):
+    """``lower(s)`` that leaves the hex digits of percent-triplets alone
+    (upper after :func:`pct_normalize_expr`, §6.2.2.1) — the host is
+    case-insensitive, its percent-encodings are not lowered with it."""
+    pieces = F.split(s, "%", -1)
+
+    def _fix(p):
+        hex2 = F.substring(p, 1, 2)
+        return F.concat(
+            F.lit("%"),
+            F.when(
+                hex2.rlike("^[0-9A-Fa-f]{2}$"),
+                F.concat(hex2, F.lower(F.substring(p, 3, 1 << 30))),
+            ).otherwise(F.lower(p)),
+        )
+
+    tail = F.slice(pieces, 2, F.greatest(F.size(pieces) - 1, F.lit(0)))
+    return F.concat(
+        F.lower(F.element_at(pieces, 1)), F.array_join(F.transform(tail, _fix), "")
+    )
+
+
 def rfc3986_normalize_expr(url):
     """RFC 3986 §6.2.2 syntax-based normalization [EXTENSION — URL
     identity for the Q1 seen-set]: the transformations every compliant
@@ -524,10 +546,15 @@ def rfc3986_normalize_expr(url):
     (``HTTP://Example.COM:80/%7euser`` vs ``http://example.com/~user``)
     collapse to ONE frontier row instead of being fetched twice:
 
-    - scheme and host lowercased (§6.2.2.1; userinfo stays case-sensitive);
+    - percent-encoding normalized via :func:`pct_normalize_expr`, FIRST:
+      decoding yields only unreserved characters (never a delimiter, so
+      the parse below sees the same structure) and a decoded host letter
+      (``ex%41mple.com``) must be lowercased with the rest of the host,
+      or normalizing twice would differ from normalizing once;
+    - scheme and host lowercased (§6.2.2.1; userinfo stays case-sensitive;
+      the hex of a percent-triplet in the host stays upper);
     - default port dropped (``:80`` for http, ``:443`` for https — §6.2.3);
-    - empty path → ``/`` for http(s) (§6.2.3);
-    - percent-encoding normalized via :func:`pct_normalize_expr`.
+    - empty path → ``/`` for http(s) (§6.2.3).
 
     Dot-segment removal (§6.2.2.3) is NOT repeated here: it already
     happens at absolutization (canonicalize()'s RFC-3986 resolution —
@@ -554,35 +581,42 @@ def rfc3986_normalize_expr(url):
         & url.rlike(r"^[a-z][a-z0-9+.\-]*://[^/?#]*/")
         & ~url.rlike(r"^[a-z][a-z0-9+.\-]*://[^/?#]*:(80|443)/")
     )
-    m_scheme = F.regexp_extract(url, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1)
-    is_hier = m_scheme != ""
-    rest = F.regexp_replace(url, r"^[A-Za-z][A-Za-z0-9+.\-]*://", "")
-    authority = F.regexp_extract(rest, r"^[^/?#]*", 0)
-    tail = F.substring(rest, F.length(authority) + F.lit(1), F.lit(1 << 30))
 
-    scheme_l = F.lower(m_scheme)
-    # userinfo (case-sensitive, kept) vs host:port (lowered)
-    has_at = authority.contains("@")
-    userinfo = F.when(
-        has_at, F.concat(F.element_at(F.split(authority, "@"), 1), F.lit("@"))
-    ).otherwise(F.lit(""))
-    host_port = F.lower(F.element_at(F.split(authority, "@"), -1))
-    host_port = F.when(
-        (scheme_l == "http") & host_port.endswith(":80"),
-        F.substring(host_port, 1, F.length(host_port) - F.lit(3)),
-    ).when(
-        (scheme_l == "https") & host_port.endswith(":443"),
-        F.substring(host_port, 1, F.length(host_port) - F.lit(4)),
-    ).otherwise(host_port)
+    def _rebuild(dec):
+        m_scheme = F.regexp_extract(dec, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1)
+        rest = F.regexp_replace(dec, r"^[A-Za-z][A-Za-z0-9+.\-]*://", "")
+        authority = F.regexp_extract(rest, r"^[^/?#]*", 0)
+        tail = F.substring(rest, F.length(authority) + F.lit(1), F.lit(1 << 30))
 
-    path_q = F.when(
-        (F.length(tail) == 0) & scheme_l.isin("http", "https"), F.lit("/")
-    ).when(
-        F.startswith(tail, F.lit("?")) & scheme_l.isin("http", "https"),
-        F.concat(F.lit("/"), tail),
-    ).otherwise(tail)
+        scheme_l = F.lower(m_scheme)
+        # userinfo (case-sensitive, kept) vs host:port (lowered)
+        has_at = authority.contains("@")
+        userinfo = F.when(
+            has_at, F.concat(F.element_at(F.split(authority, "@"), 1), F.lit("@"))
+        ).otherwise(F.lit(""))
+        host_port = F.element_at(F.split(authority, "@"), -1)
+        host_port = _lower_keep_pct_expr(F.when(
+            (scheme_l == "http") & host_port.endswith(":80"),
+            F.substring(host_port, 1, F.length(host_port) - F.lit(3)),
+        ).when(
+            (scheme_l == "https") & host_port.endswith(":443"),
+            F.substring(host_port, 1, F.length(host_port) - F.lit(4)),
+        ).otherwise(host_port))
 
-    rebuilt = F.concat(scheme_l, F.lit("://"), userinfo, host_port, path_q)
+        path_q = F.when(
+            (F.length(tail) == 0) & scheme_l.isin("http", "https"), F.lit("/")
+        ).when(
+            F.startswith(tail, F.lit("?")) & scheme_l.isin("http", "https"),
+            F.concat(F.lit("/"), tail),
+        ).otherwise(tail)
+
+        rebuilt = F.concat(scheme_l, F.lit("://"), userinfo, host_port, path_q)
+        return F.when(m_scheme != "", rebuilt).otherwise(dec)
+
+    # the lambda binds the decoded URL once: the structural pass reads it
+    # many times, and Spark does not share a subexpression that sits in
+    # one branch of a conditional
+    decoded = F.array(pct_normalize_expr(url))
     return F.when(already_normal, url).otherwise(
-        pct_normalize_expr(F.when(is_hier, rebuilt).otherwise(url))
+        F.element_at(F.transform(decoded, _rebuild), 1)
     )

@@ -92,7 +92,13 @@ def apply_robots(frontier: DataFrame, robots: DataFrame, host_col: str = "host")
       :func:`go_crawler_spark.functions.robots.robots_verdict`.
 
     Either way the rules side is a small dimension table → broadcast
-    join; the frontier is never shuffled.
+    join; the frontier is never shuffled. The simple shape is grouped to
+    one ``(host, prefixes)`` row per host inside one partition (being
+    broadcast, the rules are driver-sized, so they are not shuffled
+    either), so each frontier row meets at most one rule row and its
+    verdict is a map-side ``exists`` over that host's prefixes: a NULL
+    path is allowed, an empty prefix blocks every non-NULL path, and
+    duplicate rules change nothing.
     """
     if "pattern" in robots.columns:
         from go_crawler_spark.functions.robots import robots_verdict
@@ -102,21 +108,22 @@ def apply_robots(frontier: DataFrame, robots: DataFrame, host_col: str = "host")
         blocked = verdict.filter(~F.col("robots_allowed")).drop("robots_allowed")
         return allowed, blocked
     rules = F.broadcast(
-        robots.select(F.col("host").alias(host_col), "disallow_prefix").distinct()
+        robots.coalesce(1)
+        .groupBy(F.col("host").alias("_rhost"))
+        .agg(F.collect_set("disallow_prefix").alias("_prefixes"))
     )
-    path_expr = F.parse_url(F.col("url"), F.lit("PATH"))
-    joined = (
-        frontier.withColumn("_path", path_expr)
-        .join(rules, on=host_col, how="left")
-        .withColumn(
-            "_blocked",
-            F.col("disallow_prefix").isNotNull()
-            & F.col("_path").startswith(F.col("disallow_prefix")),
-        )
+    path = F.parse_url(F.col("url"), F.lit("PATH"))
+    joined = frontier.join(
+        rules, F.col(host_col) == F.col("_rhost"), how="left"
+    ).withColumn(
+        "_blocked",
+        F.coalesce(
+            F.exists("_prefixes", lambda p: path.startswith(p)), F.lit(False)
+        ),
     )
-    verdict = joined.groupBy(*frontier.columns).agg(F.max("_blocked").alias("_any_blocked"))
-    allowed = verdict.filter(~F.coalesce(F.col("_any_blocked"), F.lit(False))).drop("_any_blocked")
-    blocked = verdict.filter(F.coalesce(F.col("_any_blocked"), F.lit(False))).drop("_any_blocked")
+    cols = frontier.columns
+    allowed = joined.filter(~F.col("_blocked")).select(*cols)
+    blocked = joined.filter(F.col("_blocked")).select(*cols)
     return allowed, blocked
 
 

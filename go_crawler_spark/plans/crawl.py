@@ -34,14 +34,18 @@ Scale posture (designed for 10^10 URLs / 1000 executors, tested local):
   length.
 
 The scalability constant of an iterative-batch crawler is the number of
-*synchronous driver actions per round*. This loop runs THREE in the
-common case (no politeness/robots):
+Spark jobs per round: each is a synchronous driver round trip whose fixed
+cost (planning, scheduling, a broadcast or an adaptive shuffle stage)
+does not shrink with the data. A round in the common case (no
+politeness/robots) runs three checkpoint steps:
 
   J1  fetched write   — corpus lookup + size gate + ONE fused parse per
                         page (children array + rewritten html + save_path)
                         so the heavy html column crosses the Python
                         boundary exactly once and the fetched log doubles
-                        as the pages sink (pages_out = pruned view);
+                        as the pages sink (pages_out = pruned view); the
+                        round's child count rides it as an observed metric
+                        and picks J2's scheduler path;
   J2  enqueue write   — depth gate → within-round first-writer dedup
                         (map-side min_by) → bloom/cuckoo-pruned anti-join
                         vs seen → budget + seq in one fused bucketed pass
@@ -55,12 +59,26 @@ common case (no politeness/robots):
                         (builders → ≤16 combiners → driver); zero jobs
                         when the filter tier is disabled.
 
-Politeness/robots add a frontier write (its count also observed, not a
-separate action). Budget+seq use a
-single-task ordered pass while a round's candidate set is small
-(SMALL_INPUT_ROWS) and switch to the distributed fused bucketed scheme
-beyond it — at 10^10-URL scale rounds are huge and the fixed action count
-is noise; at small scale the fixed action count IS the runtime.
+Politeness/robots add a ``blocked_<r>`` write and a frontier write (its
+count also observed). No count() runs inside the loop, and a checkpoint
+read launches no job (tableio.py passes the schema it recorded at the
+write). Measured on the 48-page test corpus (local[4], adaptive query
+execution on) and pinned by tests/test_round_jobs.py:
+
+- a plain round runs SIX Spark jobs: J1 four (the write plus the
+  broadcast and shuffle stages of its joins), J2 two, J3 none while the
+  seen filter is dormant;
+- a round with host slots, robots rules and an active seen filter runs
+  20: blocked write 2, J1 9, J2 2, J3 1, frontier write 6 — the robots
+  gate and the salted slot windows are evaluated inside each of the
+  blocked, fetched and frontier writes (caching them instead made the
+  round slower: the cached relation's partitions are not coalesced).
+
+Budget+seq use a single-task ordered pass while a round's child count
+(observed on J1) is at most SMALL_INPUT_ROWS and switch to the
+distributed fused bucketed scheme beyond it — at 10^10-URL scale rounds
+are huge and the fixed job count is noise; at small scale the fixed job
+count IS the runtime.
 """
 
 from __future__ import annotations
@@ -141,6 +159,20 @@ def _admission_aggs() -> list:
         # total log rows (admitted + refused): drives the adaptive seen-
         # filter activation gate (cfg.bloom_min_seen_rows) for free
         F.count(F.lit(1)).alias("n_rows"),
+    ]
+
+
+def _count_aggs() -> list:
+    return [F.count(F.lit(1)).alias("n_rows")]
+
+
+# child links the J1 fetched write produced (NULL children = an asset row)
+def _child_aggs() -> list:
+    return [
+        F.coalesce(
+            F.sum(F.when(F.col("children").isNotNull(), F.size("children"))),
+            F.lit(0),
+        ).alias("n_children"),
     ]
 
 
@@ -698,8 +730,10 @@ def run_crawl(
             frontier = admitted_all.join(done, on="url", how="left_anti")
         else:
             frontier = admitted_all
-        frontier = io.write(frontier, "frontier")
-        n_frontier = frontier.count()
+        fstats: dict = {}
+        frontier = io.write(frontier, "frontier", observe=_count_aggs(),
+                            obs_out=fstats)
+        n_frontier = int(fstats["n_rows"])
     seen_filter_log: List[dict] = []
     while rnd < max_rounds and n_frontier > 0:
         t = time.perf_counter()
@@ -943,7 +977,13 @@ def run_crawl(
             )
             .drop("_p")
         )
-        fetched = io.write(fetched, f"fetched_{rnd}", cfg.retry)
+        # the child count rides the write as an observed metric: it sizes
+        # the J2 scheduler below without a count job
+        jstats: dict = {}
+        fetched = io.write(
+            fetched, f"fetched_{rnd}", cfg.retry,
+            observe=_child_aggs(), obs_out=jstats,
+        )
         t = _tick("fetch_extract", t)
 
         # J2 — children explode → depth gate → within-round first-writer
@@ -970,7 +1010,9 @@ def run_crawl(
         )
         candidates = children.filter(F.col("depth") <= cfg.max_depth)
         budget_remaining = max(cfg.max_count - pages_enqueued, 0)
-        small = n_frontier * 64 <= SMALL_INPUT_ROWS  # ≲ avg out-degree bound
+        # the round's real child count, not the frontier's: politeness-
+        # deferred frontier rows fetch nothing and have no children
+        small = int(jstats["n_children"]) <= SMALL_INPUT_ROWS
         verdicts = None
         filter_obs = None
         if small:
@@ -1042,9 +1084,7 @@ def run_crawl(
             fstats: dict = {}
             frontier = io.write(
                 deferred.select(*FRONTIER_COLS).unionByName(admitted),
-                "frontier",
-                observe=[F.count(F.lit(1)).alias("n_rows")],
-                obs_out=fstats,
+                "frontier", observe=_count_aggs(), obs_out=fstats,
             )
             n_frontier = int(fstats["n_rows"])
         else:

@@ -63,14 +63,21 @@ def to_cdxj_lines(
 ) -> DataFrame:
     """One CDXJ line per capture: ``<surt> <ts14> {json}`` with the fixed
     key order (url, digest, length). Map-only literal concat — both
-    engines emit identical bytes, unlike generic JSON serializers."""
+    engines emit identical bytes, unlike generic JSON serializers. The
+    URL's ``\\`` and ``"`` are escaped, so the payload is valid JSON for
+    any URL free of control characters."""
     r = cdx_records(pages, url_col, ts_col, payload_col)
+    # a JSON string: escape the backslash first, then the quote
+    url_json = F.replace(
+        F.replace(F.col("url"), F.lit("\\"), F.lit("\\\\")),
+        F.lit('"'), F.lit('\\"'),
+    )
     line = F.concat(
         F.col("surt_key"),
         F.lit(" "),
         F.col("ts14"),
         F.lit(' {"url": "'),
-        F.col("url"),
+        url_json,
         F.lit('", "digest": "'),
         F.col("digest"),
         F.lit('", "length": '),

@@ -32,6 +32,7 @@ import shutil
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from go_crawler_spark.config import RetryConfig
 from go_crawler_spark.operators.retrying import retry_call
@@ -60,6 +61,19 @@ def _run_write(df: DataFrame, publish, retry_cfg, observe, obs_out) -> None:
         action()
 
 
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable: the schema
+    Spark gives a parquet read, whatever the written frame declared."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                           for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
 class ParquetTableIO:
     """Parquet-directory backend (workdir/<name>/ per table)."""
 
@@ -67,6 +81,10 @@ class ParquetTableIO:
         self.spark = spark
         self.workdir = workdir
         os.makedirs(workdir, exist_ok=True)
+        # schema of every table this instance published or has already
+        # read: a parquet read given its schema skips Spark's footer-
+        # inference job. Forgotten whenever the files behind a name change.
+        self._schemas: dict[str, StructType] = {}
 
     def _path(self, name: str) -> str:
         return os.path.join(self.workdir, name)
@@ -88,7 +106,9 @@ class ParquetTableIO:
                 shutil.rmtree(path)
             os.rename(tmp, path)
 
+        self._schemas.pop(name, None)
         _run_write(df, publish, retry_cfg, observe, obs_out)
+        self._schemas[name] = _nullable(df.schema)
         return self.read(name)
 
     def replace(
@@ -125,9 +145,11 @@ class ParquetTableIO:
 
         _run_write(df, stage, retry_cfg, None, None)
         # commit sequence: two atomic renames, then cleanup
+        self._schemas.pop(name, None)
         if os.path.exists(path):
             os.rename(path, old)
         os.rename(tmp, path)
+        self._schemas[name] = _nullable(df.schema)
         if os.path.exists(old):
             shutil.rmtree(old)
         return self.read(name)
@@ -145,6 +167,7 @@ class ParquetTableIO:
             if not d.endswith("._old"):
                 continue
             name = d[: -len("._old")]
+            self._schemas.pop(name, None)
             path, old, tmp = self._path(name), self._path(d), self._path(name) + "._tmp"
             if os.path.exists(path):
                 shutil.rmtree(old)  # crashed after step 3
@@ -155,7 +178,18 @@ class ParquetTableIO:
                 os.rename(old, path)  # staged copy lost: restore the old
 
     def read(self, *names: str) -> DataFrame:
-        return self.spark.read.parquet(*(self._path(n) for n in names))
+        """Read one table, or the union of several with one schema. A
+        name first met here (the resume case) has its schema inferred
+        once, by one Spark job; every later read, and every read of a
+        table this instance wrote, launches none."""
+        for n in names:
+            if n not in self._schemas:
+                self._schemas[n] = self.spark.read.parquet(self._path(n)).schema
+        paths = [self._path(n) for n in names]
+        schema = self._schemas[names[0]]
+        if any(self._schemas[n] != schema for n in names[1:]):
+            return self.spark.read.parquet(*paths)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def exists(self, name: str) -> bool:
         return os.path.isdir(self._path(name))
@@ -170,6 +204,7 @@ class ParquetTableIO:
         )
 
     def delete(self, name: str) -> None:
+        self._schemas.pop(name, None)
         p = self._path(name)
         if os.path.exists(p):
             shutil.rmtree(p)

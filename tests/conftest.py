@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -29,3 +30,17 @@ def spark():
     )
     yield s
     s.stop()
+
+
+def spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs it launched), counted under a fresh job
+    group; broadcast and adaptive stage jobs inherit the caller's group."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

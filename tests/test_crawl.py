@@ -266,8 +266,9 @@ def test_large_enqueue_path(spark, pages_df, corpus, monkeypatch):
     """Drive the distributed budget+seq path (_enqueue_large →
     assign_seq_admit_budget_bucketed) through the full simulator
     equivalence: production-scale rounds take this path, but the
-    switchover needs n_frontier·64 > SMALL_INPUT_ROWS, which a 48-page
-    corpus never reaches — force it."""
+    switchover needs a round's child count (observed on its fetched
+    write) above SMALL_INPUT_ROWS, which a 48-page corpus never reaches —
+    force it: a threshold of 0 sends every round with children there."""
     monkeypatch.setattr("go_crawler_spark.plans.crawl.SMALL_INPUT_ROWS", 0)
     cfg = CrawlConfig(max_count=40)
     _assert_match(spark, pages_df, corpus, cfg)

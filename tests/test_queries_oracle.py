@@ -65,6 +65,13 @@ def test_oracle_match(spark, ducks, name):
     assert _canon(srows, scols) == _canon(drows, dcols), f"{name}: values differ"
 
 
+def test_delay_oracle_integer_column(ducks):
+    """DuckDB's sum() is HUGEINT, which reaches pandas as float64; the
+    oracle casts ``delay_ms`` back to BIGINT so it compares as int64."""
+    pdf = ducks.sql(entry_mod.oracle_sql()["adaptive_politeness_delay"]).df()
+    assert str(pdf["delay_ms"].dtype) == "int64"
+
+
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_queries_run(spark, name):
     df = entry_mod.queries()[name](spark, SF_SMALL)

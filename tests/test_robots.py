@@ -247,3 +247,50 @@ def test_robots_sitemap_refs_edges(spark):
         ("a.example", "https://a.example/s1.xml"),
         ("a.example", "https://a.example/s2.xml"),
     ]
+
+
+class TestPrefixGate:
+    """The simple ``(host, disallow_prefix)`` shape of
+    :func:`go_crawler_spark.operators.politeness.apply_robots`: a
+    broadcast per-host prefix array, decided map-side."""
+
+    FRONTIER = [
+        ("https://a.com/x/1", "a.com", 1),   # /x prefix: blocked
+        ("https://a.com/y", "a.com", 2),     # no matching prefix
+        ("https://b.com/", "b.com", 3),      # empty prefix blocks all
+        (None, "a.com", 4),                  # NULL path: allowed
+        ("https://c.com/x", None, 5),        # NULL host: no rules
+        ("https://a.com/xy", "a.com", 6),    # prefix, not segment
+        ("https://d.com/x", "d.com", 7),     # host without rules
+    ]
+
+    def _split(self, spark, rules):
+        from go_crawler_spark.operators.politeness import apply_robots
+
+        fr = spark.createDataFrame(
+            self.FRONTIER, "url string, host string, seq long")
+        rb = spark.createDataFrame(rules, "host string, disallow_prefix string")
+        allowed, blocked = apply_robots(fr, rb)
+        return (allowed, sorted(r["seq"] for r in allowed.collect()),
+                sorted(r["seq"] for r in blocked.collect()))
+
+    def test_semantics(self, spark):
+        rules = [("a.com", "/x"), ("b.com", ""), ("a.com", None)]
+        _, allowed, blocked = self._split(spark, rules)
+        assert allowed == [2, 4, 5, 7]
+        assert blocked == [1, 3, 6]
+        # duplicate rules change nothing
+        _, allowed2, blocked2 = self._split(spark, rules + rules)
+        assert (allowed2, blocked2) == (allowed, blocked)
+
+    def test_frontier_never_shuffled(self, spark):
+        import io
+        from contextlib import redirect_stdout
+
+        allowed, _, _ = self._split(spark, [("a.com", "/x")])
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            allowed.explain()
+        plan = buf.getvalue()
+        assert "BroadcastHashJoin" in plan
+        assert "Exchange hashpartitioning" not in plan

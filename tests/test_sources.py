@@ -118,6 +118,25 @@ def test_wet_records_header_and_octet_length(spark):
     assert back == {"https://a/1": "café ü", "https://a/2": ""}
 
 
+def test_cdxj_payload_is_json_for_quote_and_backslash(spark):
+    """A URL holding ``"`` and ``\\`` still yields a JSON payload that
+    decodes back to the URL."""
+    import json
+
+    from go_crawler_spark.sources.cdx import to_cdxj_lines
+    from pyspark.sql import functions as F
+
+    urls = ['https://a.example/q?x="y"\\z', 'https://a.example/\\"', "https://a.example/"]
+    pages = spark.createDataFrame(
+        [(u, "2024-01-01 00:00:00", b"b") for u in urls],
+        "url string, warc_ts string, html binary",
+    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
+    lines = [r["cdxj"] for r in to_cdxj_lines(pages).collect()]
+    assert len(lines) == len(urls)
+    got = sorted(json.loads(line.split(" ", 2)[2])["url"] for line in lines)
+    assert got == sorted(urls)
+
+
 def test_cdxj_line_golden_and_sorted_write_shape(spark):
     """CDXJ golden line (fixed key order, octet length, md5 digest) and
     the global-order discipline: repartitionByRange + sortWithinPartitions

@@ -15,6 +15,7 @@ from go_crawler_spark.tableio import (
     iceberg_available,
     make_tableio,
 )
+from tests.conftest import spark_jobs
 
 
 @pytest.fixture()
@@ -102,6 +103,60 @@ def test_replace_lost_staging_restores_old(spark, io):
     io.cleanup_staging()
     assert io.read("enqueue_0").count() == 5
     assert not os.path.exists(path + "._old")
+
+
+def _read_jobs(spark, io, *names):
+    """(io.read(*names), Spark jobs the read itself launched)."""
+    return spark_jobs(spark, lambda: io.read(*names))
+
+
+def test_read_of_own_table_launches_no_job_and_tracks_schema(spark, io):
+    """A table this instance wrote reads with its recorded schema (no
+    footer-inference job), and the recorded schema follows every change
+    of the files behind the name."""
+    path = os.path.join(io.workdir, "t")
+    io.write(spark.range(4), "t")
+    df, jobs = _read_jobs(spark, io, "t")
+    assert jobs == 0
+    assert df.schema == spark.read.parquet(path).schema
+    assert sorted(r["id"] for r in df.collect()) == [0, 1, 2, 3]
+
+    # replace with an extra column
+    io.replace(io.read("t").withColumn("x", F.col("id") * 2), "t")
+    df, jobs = _read_jobs(spark, io, "t")
+    assert jobs == 0 and df.columns == ["id", "x"]
+    assert sorted((r["id"], r["x"]) for r in df.collect()) == [
+        (0, 0), (1, 2), (2, 4), (3, 6)]
+
+    # recover_replaces promoting a staged copy with a different schema
+    spark.range(3).select(F.col("id").cast("string").alias("s")).write.parquet(
+        path + "._tmp")
+    os.rename(path, path + "._old")
+    io.recover_replaces()
+    df = io.read("t")
+    assert df.columns == ["s"]
+    assert sorted(r["s"] for r in df.collect()) == ["0", "1", "2"]
+    assert _read_jobs(spark, io, "t")[1] == 0  # inferred once, then known
+
+    # delete, then a rewrite with another schema
+    io.delete("t")
+    io.write(spark.range(2).select(F.lit("v").alias("k"), "id"), "t")
+    df, jobs = _read_jobs(spark, io, "t")
+    assert jobs == 0 and df.columns == ["k", "id"]
+    assert sorted((r["k"], r["id"]) for r in df.collect()) == [("v", 0), ("v", 1)]
+
+
+def test_read_infers_unknown_tables_once(spark, io):
+    """Tables written by another instance (the resume case) are inferred
+    on first read only; a union of tables whose schemas differ still
+    reads (inferred, as before)."""
+    io.write(spark.range(3), "a_0")
+    io.write(spark.range(2).withColumn("y", F.lit(1)), "b_0")
+    other = ParquetTableIO(spark, io.workdir)
+    df, jobs = _read_jobs(spark, other, "a_0")
+    assert jobs == 1 and df.count() == 3
+    assert _read_jobs(spark, other, "a_0")[1] == 0
+    assert other.read("a_0", "b_0").count() == 5
 
 
 def test_multi_read_unions(spark, io):

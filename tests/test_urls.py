@@ -310,3 +310,27 @@ def test_rfc3986_normalize_collapses_seen_identity(spark):
     n = df.select(rfc3986_normalize_expr(F.col("u")).alias("n")).distinct()
     rows = n.collect()
     assert len(rows) == 1 and rows[0]["n"] == "http://example.com/~user"
+
+
+def test_rfc3986_normalize_idempotent(spark):
+    """Normalizing twice equals normalizing once: the host is lowercased
+    AFTER percent-decoding (``ex%41mple`` → ``example``), and the hex of
+    a percent-triplet left in the host stays upper."""
+    from pyspark.sql import functions as F
+
+    from go_crawler_spark.functions.urls import rfc3986_normalize_expr
+
+    cases = [
+        ("http://ex%41mple.com/", "http://example.com/"),
+        ("HTTP://EX%41MPLE.COM:80/%7eA", "http://example.com/~A"),
+        ("https://u%41@H%c3%A9.EX:443?q", "https://uA@h%C3%A9.ex/?q"),
+        ("http://ex%2dample.com", "http://ex-ample.com/"),
+        ("mailto:Joe%41@x", "mailto:JoeA@x"),
+    ]
+    df = spark.createDataFrame(cases, "u string, want string")
+    once = df.select("u", "want", rfc3986_normalize_expr(F.col("u")).alias("n1"))
+    twice = once.select(
+        "u", "want", "n1", rfc3986_normalize_expr(F.col("n1")).alias("n2"))
+    for r in twice.collect():
+        assert r["n1"] == r["want"], (r["u"], r["n1"])
+        assert r["n2"] == r["n1"], (r["u"], r["n1"], r["n2"])
