@@ -439,7 +439,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("source").alias("host"),
             F.col("doc_id").alias("seq"),
         )
-        fetch_now, _ = assign_fetch_slots(frontier, slots_per_host=3, n_salts=4)
+        fetch_now = assign_fetch_slots(
+            frontier, slots_per_host=3, n_salts=4).filter(F.col("fetch_now"))
         return fetch_now.select(F.col("seq").alias("doc_id"), F.col("host").alias("source"))
 
     def global_seq_assignment(spark, sf):
@@ -2099,7 +2100,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def inverted_index_terms(spark, sf):
         # capped inverted index (BM25 candidate tier / vocabulary census):
         # global ranking is fully tie-broken (term is unique) so the
-        # top-100 slice is deterministic.
+        # top-100 slice is deterministic. The postings head is emitted as
+        # its comma-joined ascending doc ids, a scalar cell.
         from go_crawler_spark.operators.index import inverted_index
 
         docs = _t(spark, sf, "documents")
@@ -2107,6 +2109,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             inverted_index(docs, postings_cap=8, min_df=2)
             .orderBy(F.desc("df"), F.desc("cf"), F.asc("term"))
             .limit(100)
+            .withColumn("postings", F.array_join(
+                F.col("postings").cast("array<string>"), ","))
         )
 
     def bpe_learn_merges(spark, sf):
@@ -4786,7 +4790,9 @@ def oracle_sql() -> dict[str, str]:
                      CAST(sum(tf) AS BIGINT) AS cf
               FROM ptd GROUP BY term
             ), head AS (
-              SELECT term, list(doc_id ORDER BY doc_id) AS postings FROM (
+              SELECT term,
+                     string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
+                       AS postings FROM (
                 SELECT term, doc_id,
                        row_number() OVER (PARTITION BY term
                                           ORDER BY doc_id) AS rn
@@ -5021,8 +5027,9 @@ def oracle_sql() -> dict[str, str]:
             q1 AS (SELECT doc_id, str_split(u, '%') AS parts FROM raw),
             q2 AS (
               SELECT doc_id, parts[1] AS head,
-                list_transform(parts[2:], p -> struct_pack(
+                list_transform(parts[2:], (p, i) -> struct_pack(
                   p := p,
+                  stray := length(p) < 2 AND i < len(parts) - 1,
                   hx := substr(p, 1, 2),
                   ok := regexp_matches(substr(p, 1, 2), '^[0-9A-Fa-f]{2}$'),
                   code := (strpos('0123456789abcdef', substr(lower(substr(p, 1, 2)), 1, 1)) - 1) * 16
@@ -5036,6 +5043,7 @@ def oracle_sql() -> dict[str, str]:
                                   OR s.code BETWEEN 97 AND 122 OR s.code IN (45, 46, 95, 126))
                      THEN chr(CAST(s.code AS INT)) || substr(s.p, 3)
                    WHEN s.ok THEN '%' || upper(s.hx) || substr(s.p, 3)
+                   WHEN s.stray THEN '%25' || s.p
                    ELSE '%' || s.p END), ''), '') AS u
               FROM q2),
             p1 AS (

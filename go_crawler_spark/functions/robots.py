@@ -277,7 +277,7 @@ def robots_verdict(
     otherwise; the per-URL reduction is ``max(struct(pattern_len, allow))``
     so a length tie resolves to Allow (struct comparison is
     lexicographic and true > false)."""
-    chosen = select_agent_group(rules, agent)
+    chosen = select_agent_group(rules, agent).withColumnRenamed("host", host_col)
     path = F.coalesce(F.parse_url(F.col(url_col), F.lit("PATH")), F.lit("/"))
     is_plain = ~F.col("pattern").contains("*") & ~F.col("pattern").endswith("$")
     matches = F.when(

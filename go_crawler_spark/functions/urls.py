@@ -484,7 +484,11 @@ def pct_normalize_expr(url):
     (ALPHA / DIGIT / ``-._~`` — §2.3: these encodings are equivalent to
     the raw character and SHOULD be decoded) and uppercase the hex of
     every other triplet (``%3a`` ≡ ``%3A``; the canonical form is upper).
-    Malformed ``%`` sequences pass through byte-identically.
+    Malformed ``%`` sequences pass through byte-identically, except a
+    stray ``%`` with fewer than two characters before the next ``%``:
+    it is emitted as ``%25``, since a decoded character could otherwise
+    complete a new triplet behind it (``%%34%31`` → ``%41``), and
+    normalizing twice would differ from normalizing once.
 
     Mechanics: split on ``%`` — each later piece starts with the
     candidate hex pair — then one ``transform`` re-emits each piece
@@ -496,7 +500,9 @@ def pct_normalize_expr(url):
     pieces = F.split(url, "%", -1)
     head = F.element_at(pieces, 1)
 
-    def _fix(p):
+    tail = F.slice(pieces, 2, F.greatest(F.size(pieces) - 1, F.lit(0)))
+
+    def _fix(p, i):
         hex2 = F.substring(p, 1, 2)
         is_hex = hex2.rlike("^[0-9A-Fa-f]{2}$")
         code = F.conv(hex2, 16, 10).cast("int")
@@ -510,10 +516,11 @@ def pct_normalize_expr(url):
         return (
             F.when(is_hex & unreserved, F.concat(F.char(code), rest))
             .when(is_hex, F.concat(F.lit("%"), F.upper(hex2), rest))
+            .when((F.length(p) < 2) & (i < F.size(tail) - 1),
+                  F.concat(F.lit("%25"), p))
             .otherwise(F.concat(F.lit("%"), p))
         )
 
-    tail = F.slice(pieces, 2, F.greatest(F.size(pieces) - 1, F.lit(0)))
     return F.concat(head, F.array_join(F.transform(tail, _fix), ""))
 
 

@@ -22,7 +22,7 @@ host regardless of host size, so the skewed window is bounded.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
 def assign_fetch_slots(
@@ -32,8 +32,10 @@ def assign_fetch_slots(
     host_col: str = "host",
     order_col: str = "seq",
     host_slots: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Split frontier into (fetch_now, deferred) under per-host slots.
+    eligible: Column | None = None,
+) -> DataFrame:
+    """``frontier`` plus a boolean ``fetch_now`` column: true for the rows
+    fetched this round under per-host slots, false for the rows deferred.
 
     ``slots_per_host <= 0`` disables the global cap; ``host_slots`` is an
     optional per-host override table ``(host, host_slots)`` — e.g. derived
@@ -41,19 +43,24 @@ def assign_fetch_slots(
     :func:`go_crawler_spark.functions.robots.crawl_delay_slots` — joined
     broadcast (a host-level table is tiny next to the frontier). A host's
     limit is its override if present, else the global cap (unlimited when
-    the global cap is off).
+    the global cap is off). Only ``eligible`` rows (default all) compete
+    for slots; the others ride along with ``fetch_now`` false. Phase 2
+    ranks a host's phase-1 survivors together while every other row stays
+    in its (host, salt) partition, so no task sees a whole mega-host.
 
     Deterministic: ``order_col`` is a total order, and the salt is a pure
     function of the URL (xxhash64 % n_salts), not a random number.
     """
+    ok = F.lit(True) if eligible is None else eligible
     if slots_per_host <= 0 and host_slots is None:
-        return frontier, frontier.limit(0)
+        return frontier.withColumn("fetch_now", ok)
     default_limit = slots_per_host if slots_per_host > 0 else 2**31 - 1
 
-    base = frontier
+    base = frontier.withColumn("_ok", ok)
     if host_slots is not None:
         base = base.join(
-            F.broadcast(host_slots.select(host_col, "host_slots")),
+            F.broadcast(host_slots.select(F.col("host").alias(host_col),
+                                          "host_slots")),
             on=host_col, how="left",
         )
         limit = F.coalesce(F.col("host_slots"), F.lit(default_limit))
@@ -63,22 +70,32 @@ def assign_fetch_slots(
     salted = base.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col("url"), F.lit(7)), F.lit(n_salts))
     )
-    w1 = Window.partitionBy(host_col, "_salt").orderBy(order_col)
+    # eligible rows rank first, so a rider never takes a slot
+    order = [F.col("_ok").desc(), F.col(order_col)]
+    w1 = Window.partitionBy(host_col, "_salt").orderBy(*order)
     phase1 = salted.withColumn("_r1", F.row_number().over(w1))
-    survivors = phase1.filter(F.col("_r1") <= limit)
+    survivor = F.col("_ok") & (F.col("_r1") <= limit)
 
-    w2 = Window.partitionBy(host_col).orderBy(order_col)
-    phase2 = survivors.withColumn("_r2", F.row_number().over(w2))
-    drop_cols = ["_salt", "_r1", "_r2"] + (
+    w2 = Window.partitionBy(
+        host_col, F.when(survivor, F.lit(-1)).otherwise(F.col("_salt"))
+    ).orderBy(*order)
+    phase2 = phase1.withColumn("_r2", F.row_number().over(w2))
+    drop_cols = ["_ok", "_salt", "_r1", "_r2"] + (
         ["host_slots"] if host_slots is not None else []
     )
-    fetch_now = phase2.filter(F.col("_r2") <= limit).drop(*drop_cols)
-    deferred = frontier.join(fetch_now.select("url"), on="url", how="left_anti")
-    return fetch_now, deferred
+    return phase2.withColumn(
+        "fetch_now", survivor & (F.col("_r2") <= limit)
+    ).drop(*drop_cols)
 
 
-def apply_robots(frontier: DataFrame, robots: DataFrame, host_col: str = "host") -> tuple[DataFrame, DataFrame]:
-    """Split frontier into (allowed, blocked) by robots rules.
+def robots_blocked(
+    frontier: DataFrame,
+    robots: DataFrame,
+    host_col: str = "host",
+    url_col: str = "url",
+) -> DataFrame:
+    """``frontier`` plus a boolean ``robots_blocked`` column: true where
+    the robots rules disallow the URL in ``url_col`` for ``host_col``.
 
     Two rule-table shapes are accepted:
 
@@ -103,28 +120,36 @@ def apply_robots(frontier: DataFrame, robots: DataFrame, host_col: str = "host")
     if "pattern" in robots.columns:
         from go_crawler_spark.functions.robots import robots_verdict
 
-        verdict = robots_verdict(frontier, robots, host_col=host_col)
-        allowed = verdict.filter(F.col("robots_allowed")).drop("robots_allowed")
-        blocked = verdict.filter(~F.col("robots_allowed")).drop("robots_allowed")
-        return allowed, blocked
+        verdict = robots_verdict(frontier, robots, url_col=url_col,
+                                 host_col=host_col)
+        return verdict.withColumn(
+            "robots_blocked", ~F.col("robots_allowed")
+        ).drop("robots_allowed")
     rules = F.broadcast(
         robots.coalesce(1)
         .groupBy(F.col("host").alias("_rhost"))
         .agg(F.collect_set("disallow_prefix").alias("_prefixes"))
     )
-    path = F.parse_url(F.col("url"), F.lit("PATH"))
-    joined = frontier.join(
+    path = F.parse_url(F.col(url_col), F.lit("PATH"))
+    return frontier.join(
         rules, F.col(host_col) == F.col("_rhost"), how="left"
-    ).withColumn(
-        "_blocked",
+    ).select(
+        *frontier.columns,
         F.coalesce(
             F.exists("_prefixes", lambda p: path.startswith(p)), F.lit(False)
-        ),
+        ).alias("robots_blocked"),
     )
+
+
+def apply_robots(frontier: DataFrame, robots: DataFrame, host_col: str = "host") -> tuple[DataFrame, DataFrame]:
+    """Split frontier into (allowed, blocked) by robots rules
+    (:func:`robots_blocked` gives the verdict and its semantics)."""
+    marked = robots_blocked(frontier, robots, host_col=host_col)
     cols = frontier.columns
-    allowed = joined.filter(~F.col("_blocked")).select(*cols)
-    blocked = joined.filter(F.col("_blocked")).select(*cols)
-    return allowed, blocked
+    return (
+        marked.filter(~F.col("robots_blocked")).select(*cols),
+        marked.filter(F.col("robots_blocked")).select(*cols),
+    )
 
 
 def allocate_host_budget(

@@ -58,30 +58,24 @@ def url_trap_census(
     )
 
 
-def split_by_traps(
+def mark_traps(
     frontier: DataFrame, trap_templates: DataFrame, url_col: str = "url"
-) -> tuple[DataFrame, DataFrame]:
-    """(passed, trapped) split of a frontier against a trap-template table
-    — the crawl-loop form of :func:`trap_gate` (one broadcast left join
-    feeds both branches; the template list is census-sized, tiny next to
-    the frontier). ``trap_templates`` is either a raw (template) list or a
-    full :func:`url_trap_census` output (rows with ``is_trap`` false are
-    ignored)."""
+) -> DataFrame:
+    """``frontier`` plus a boolean ``trapped`` column — the crawl-loop
+    form of :func:`trap_gate` (one broadcast left join; the template list
+    is census-sized, tiny next to the frontier). ``trap_templates`` is
+    either a raw (template) list or a full :func:`url_trap_census` output
+    (rows with ``is_trap`` false are ignored)."""
     tpl = trap_templates
     if "is_trap" in tpl.columns:
         tpl = tpl.filter(F.col("is_trap"))
-    traps = tpl.select("template").withColumn("_trap_hit", F.lit(True))
+    traps = tpl.select(F.col("template").alias("_tpl"),
+                       F.lit(True).alias("_trap_hit"))
     keyed = frontier.withColumn("_tpl", url_template_expr(F.col(url_col)))
-    joined = keyed.join(
-        F.broadcast(traps), keyed["_tpl"] == traps["template"], "left"
+    return keyed.join(F.broadcast(traps), "_tpl", "left").select(
+        *frontier.columns,
+        F.coalesce(F.col("_trap_hit"), F.lit(False)).alias("trapped"),
     )
-    passed = joined.filter(F.col("_trap_hit").isNull()).drop(
-        "_tpl", "template", "_trap_hit"
-    )
-    trapped = joined.filter(F.col("_trap_hit")).drop(
-        "_tpl", "template", "_trap_hit"
-    )
-    return passed, trapped
 
 
 def trap_gate(frontier: DataFrame, census: DataFrame, url_col: str = "url") -> DataFrame:

@@ -2,7 +2,8 @@
 
 One *round* is a single declarative lineage (SURVEY §3.1 Spark lifecycle):
 
-    frontier → [robots] → [politeness split] → fetch join (pages corpus)
+    frontier → [gate: traps, robots, redirects, host slots]
+             → fetch join (pages corpus)
              → fused parse UDF (children + rewritten html, one pass)
              → explode → depth filter → within-round first-writer dedup
              → anti-join seen (bloom/cuckoo-pruned) → fused budget+seq
@@ -59,8 +60,14 @@ politeness/robots) runs three checkpoint steps:
                         (builders → ≤16 combiners → driver); zero jobs
                         when the filter tier is disabled.
 
-Politeness/robots add a ``blocked_<r>`` write and a frontier write (its
-count also observed). No count() runs inside the loop, and a checkpoint
+A round with any gate on (traps, robots, redirects, host slots) first
+writes ``gate_<r>``: every frontier row with its verdict — fetch now,
+deferred, or the skip status — evaluated once, its deferred count
+observed. J1 reads the fetch-now rows and appends the skipped ones to
+``fetched_<r>`` (status set, size 0, no content); the next frontier is
+the deferred rows ∪ the admitted enqueue rows, a read sized by the two
+observed counts. ``gate_<r-1>`` is deleted once round r's manifest
+lands. No count() runs inside the loop or the resume, and a checkpoint
 read launches no job (tableio.py passes the schema it recorded at the
 write). Measured on the 48-page test corpus (local[4], adaptive query
 execution on) and pinned by tests/test_round_jobs.py:
@@ -69,10 +76,8 @@ execution on) and pinned by tests/test_round_jobs.py:
   broadcast and shuffle stages of its joins), J2 two, J3 none while the
   seen filter is dormant;
 - a round with host slots, robots rules and an active seen filter runs
-  20: blocked write 2, J1 9, J2 2, J3 1, frontier write 6 — the robots
-  gate and the salted slot windows are evaluated inside each of the
-  blocked, fetched and frontier writes (caching them instead made the
-  round slower: the cached relation's partitions are not coalesced).
+  11: gate write 4 (with its broadcast and slot-window shuffle stages),
+  J1 4 as in a plain round, J2 2, J3 1.
 
 Budget+seq use a single-task ordered pass while a round's child count
 (observed on J1) is at most SMALL_INPUT_ROWS and switch to the
@@ -106,8 +111,13 @@ from go_crawler_spark.operators.dedup import (
     tree_build_filter,
 )
 from go_crawler_spark.operators.fetch import fetch_hits, fetch_round
-from go_crawler_spark.operators.politeness import apply_robots, assign_fetch_slots
-from go_crawler_spark.operators.traps import split_by_traps
+from go_crawler_spark.operators.politeness import assign_fetch_slots, robots_blocked
+from go_crawler_spark.operators.redirects import (
+    STATUS_BLOCKED_HOP,
+    STATUS_STOPPED,
+    apply_redirect_mapping,
+)
+from go_crawler_spark.operators.traps import mark_traps
 from go_crawler_spark.operators.sequence import (
     SMALL_INPUT_ROWS,
     assign_seq_admit_budget_bucketed,
@@ -122,6 +132,11 @@ ENQUEUE_SCHEMA = (
     "admitted boolean, enqueue_round int"
 )
 FRONTIER_COLS = ["url", "kind", "depth", "seq", "host"]
+
+# gate_<r> verdicts: fetched this round, deferred to the next by the host
+# slots, or the skip status the fetched log records (the row stays seen)
+FETCH, DEFER = "fetch", "defer"
+GATE_SKIPS = ("skipped_trap", "skipped_robots", "skipped_redirect")
 
 
 @dataclass
@@ -160,10 +175,6 @@ def _admission_aggs() -> list:
         # filter activation gate (cfg.bloom_min_seen_rows) for free
         F.count(F.lit(1)).alias("n_rows"),
     ]
-
-
-def _count_aggs() -> list:
-    return [F.count(F.lit(1)).alias("n_rows")]
 
 
 # child links the J1 fetched write produced (NULL children = an asset row)
@@ -384,6 +395,138 @@ def _absorb_filter(enqueue: DataFrame, filt, fan_in: int = 16):
     return filt.merge(delta)
 
 
+def _gate_frame(
+    frontier: DataFrame,
+    cfg: CrawlConfig,
+    traps: Optional[DataFrame],
+    robots: Optional[DataFrame],
+    redirect_map: Optional[DataFrame],
+    host_slots: Optional[DataFrame],
+) -> DataFrame:
+    """Every frontier row with its round ``verdict``: the skip status of
+    the first gate it fails — trap, robots on the alias, a budget-stopped
+    redirect chain, a chain aborted at a robots-disallowed hop, robots on
+    the resolved target — else FETCH or DEFER from the per-host slot
+    windows, which rank only the rows every gate passed.
+
+    Under redirects the row also carries the request's target:
+    ``_fetch_url`` (the final URL, whose content the row fetches under its
+    own identity) and ``_fetch_host``, on which the slots and the robots
+    re-check key (the request lands there). The row's own ``host`` stays
+    the ALIAS host, so a deferred row re-enters the next round's
+    pre-redirect gates with (alias host, alias path) intact. Robots is
+    enforced on every request of a chain: the alias, the intermediate
+    hops (baked into the mapping, ``blocked_robots_hop``) and the final
+    target (re-checking an unredirected row is idempotent)."""
+
+    def first_skip(failed, status: str):
+        return F.coalesce(F.col("verdict"), F.when(failed, F.lit(status)))
+
+    g = frontier.withColumn("verdict", F.lit(None).cast("string"))
+    if traps is not None:
+        g = mark_traps(g, traps).withColumn(
+            "verdict", first_skip(F.col("trapped"), "skipped_trap")
+        ).drop("trapped")
+    if robots is not None:
+        g = robots_blocked(g, robots).withColumn(
+            "verdict", first_skip(F.col("robots_blocked"), "skipped_robots")
+        ).drop("robots_blocked")
+    slot_host = "host"
+    if redirect_map is not None:
+        # ONE join against the pre-materialized source mapping; rows whose
+        # URL is not a redirect source pass with NULL _final. The when()
+        # sits INSIDE the UDF argument so unredirected rows ship NULL
+        # across Arrow (same trick as the parse UDF).
+        rstatus = F.col("_rstatus")
+        redirected = F.col("_final").isNotNull()
+        g = (
+            apply_redirect_mapping(g, redirect_map)
+            .withColumn("verdict",
+                        first_skip(rstatus == STATUS_STOPPED, "skipped_redirect"))
+            .withColumn("verdict",
+                        first_skip(rstatus == STATUS_BLOCKED_HOP, "skipped_robots"))
+            .withColumn("_fetch_url", F.coalesce("_final", "url"))
+            .withColumn(
+                "_fetch_host",
+                F.when(
+                    redirected,
+                    registrable_host_udf(F.when(redirected, F.col("_final"))),
+                ).otherwise(F.col("host")),
+            )
+            .drop("_final", "_rstatus")
+        )
+        if robots is not None:
+            g = robots_blocked(
+                g, robots, host_col="_fetch_host", url_col="_fetch_url"
+            ).withColumn(
+                "verdict", first_skip(F.col("robots_blocked"), "skipped_robots")
+            ).drop("robots_blocked")
+        slot_host = "_fetch_host"
+    g = assign_fetch_slots(
+        g, cfg.host_slots_per_round, cfg.politeness_salts,
+        host_col=slot_host,
+        host_slots=host_slots,  # e.g. robots Crawl-delay -> slots/round
+        eligible=F.col("verdict").isNull(),
+    )
+    return g.withColumn(
+        "verdict",
+        F.coalesce(
+            F.col("verdict"),
+            F.when(F.col("fetch_now"), F.lit(FETCH)).otherwise(F.lit(DEFER)),
+        ),
+    ).drop("fetch_now")
+
+
+def _deferred(gate: DataFrame) -> DataFrame:
+    return gate.filter(F.col("verdict") == DEFER).select(*FRONTIER_COLS)
+
+
+def _skip_log(gate: DataFrame, schema, rnd: int) -> DataFrame:
+    """The gate-skipped rows in the fetched log's ``schema``: status = the
+    verdict, size 0, no content and no children."""
+    fill = {
+        "round": F.lit(rnd),
+        "status": F.col("verdict"),
+        "size": F.lit(0).cast("long"),
+    }
+    return gate.filter(F.col("verdict").isin(*GATE_SKIPS)).select(*[
+        F.col(f.name) if f.name in FRONTIER_COLS
+        else fill.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
+        for f in schema.fields
+    ])
+
+
+def _load_manifest(io, workdir: str) -> dict:
+    """The workdir's manifest. A checkpoint of the older layout (a
+    ``frontier`` table and ``blocked_<r>`` logs, no ``seen_rows`` in the
+    manifest) does not resume."""
+    man = io.get_manifest()
+    if man is None:
+        raise FileNotFoundError(f"no crawl manifest in {workdir}")
+    if "seen_rows" not in man:
+        raise ValueError(f"{workdir} holds a checkpoint of an older layout "
+                         "that cannot resume; start again in a fresh workdir")
+    return man
+
+
+def _drop_torn_round(io, rnd: int) -> None:
+    """Delete what an interrupted round ``rnd`` left: the manifest marks
+    round rnd-1 complete only after ``enqueue_<rnd>`` landed, so
+    ``fetched_``/``gate_`` >= rnd and ``enqueue_`` > rnd are torn writes;
+    a ``gate_`` < rnd-1 outlived a crash between the manifest and its
+    delete. Orphaned parquet staging dirs go too."""
+    io.cleanup_staging()
+    for name in io.list_names():
+        kind, _, num = name.rpartition("_")
+        if not num.isdigit():
+            continue
+        n = int(num)
+        if ((kind in ("fetched", "gate") and n >= rnd)
+                or (kind == "gate" and n < rnd - 1)
+                or (kind == "enqueue" and n > rnd)):
+            io.delete_stale(name)
+
+
 def resume_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -402,9 +545,10 @@ def resume_crawl(
     [EXTENSION] — the north rule requires any round to be resumable).
 
     State recovered from the table backend: the per-round enqueue tables
-    (⇒ seen set, schedule, seq counter), the manifest (round, counters),
-    and the current frontier (recomputed from enqueue ∪ fetch logs:
-    admitted items not yet fetched). The bloom filter is rebuilt from the
+    (⇒ seen set, schedule), the manifest (round, seq counter, seen-row
+    count, frontier size), and the current frontier: the last complete
+    round's admitted enqueue rows ∪ the rows its ``gate_<r>`` deferred.
+    The bloom filter is rebuilt from the
     enqueue tables; with ``trap_refresh_rounds`` enabled the persisted
     ``trap_census`` table re-arms the trap gate before the first resumed
     round.
@@ -413,9 +557,7 @@ def resume_crawl(
 
     io = make_tableio(spark, workdir, cfg.table_backend,
                       cfg.iceberg_catalog, cfg.iceberg_namespace)
-    man = io.get_manifest()
-    if man is None:
-        raise FileNotFoundError(f"no crawl manifest in {workdir}")
+    man = _load_manifest(io, workdir)
     return run_crawl(
         spark, pages, [], cfg, robots=robots, workdir=workdir,
         max_rounds=max_rounds, timing=timing, host_slots=host_slots,
@@ -461,21 +603,7 @@ def compact_enqueue_log(
 
     io = make_tableio(spark, workdir, cfg.table_backend,
                       cfg.iceberg_catalog, cfg.iceberg_namespace)
-    man = io.get_manifest()
-    if man is None:
-        raise FileNotFoundError(f"no crawl manifest in {workdir}")
-    rnd = man["round"] + 1
-    io.cleanup_staging()
-    for name in io.list_names():
-        for prefix, first_stale in (("fetched_", rnd), ("blocked_", rnd),
-                                    ("enqueue_", rnd + 1)):
-            if name.startswith(prefix):
-                try:
-                    num = int(name[len(prefix):])
-                except ValueError:
-                    continue
-                if num >= first_stale:
-                    io.delete_stale(name)
+    _drop_torn_round(io, _load_manifest(io, workdir)["round"] + 1)
 
     names = io.list_names("enqueue_")
     if len(names) <= 1:
@@ -524,30 +652,18 @@ def run_crawl(
     ``redirects`` [EXTENSION] is an optional ``(src_url, dst_url)`` hop
     table. The loop-invariant source mapping is resolved ONCE before the
     loop (:func:`go_crawler_spark.operators.redirects.
-    resolve_redirect_sources`, the Go client's 10-request budget),
+    resolve_redirect_sources`, the Go client's 10-request budget) and
     checkpointed as ``redirect_map`` (restored on resume — NOTE the
     mapping bakes the per-hop robots enforcement of the rules passed at
     FIRST materialization, so resume legs must pass the same robots
     table; changed rules require a fresh workdir or deleting
-    ``redirect_map``), and each
-    round's frontier applies a single hash join against it BEFORE
-    politeness and the fetch — budget-stopped chains are blocked as
-    ``skipped_redirect`` (staying seen, Go's client would error after
+    ``redirect_map``); each round's gate applies one hash join against it
+    (:func:`_gate_frame`). Budget-stopped chains are logged
+    ``skipped_redirect`` (staying seen: Go's client would error after
     burning its budget), and resolved rows fetch the FINAL target's
-    content while keeping their original URL identity (reference parity:
-    the Go client returns only the body, pkg/httpclient/client.go:48-71 —
-    the response URL is discarded, so seen/dedup/children all key on the
-    enqueued URL). Politeness and the per-request robots re-check key on
-    the resolved TARGET host (the request lands there) via a
-    politeness-only column; the frontier's own ``host`` stays the ALIAS
-    host so politeness-deferred rows re-enter the next round's
-    pre-redirect gates with (alias host, alias path) intact. Robots is
-    enforced on EVERY request of a chain: the alias (pre-redirect gate),
-    each intermediate hop (baked into the one-time mapping via
-    :func:`go_crawler_spark.operators.redirects.blocked_hop_targets` —
-    chains aborting at a disallowed hop carry ``blocked_robots_hop`` and
-    are logged ``skipped_robots``), and the final target (per-request
-    re-check after resolution).
+    content under their original URL identity (reference parity: the Go
+    client returns only the body, pkg/httpclient/client.go:48-71, so
+    seen/dedup/children all key on the enqueued URL).
 
     ``trap_refresh_rounds=R`` (0 = off) closes the trap loop IN-CRAWL: every
     R rounds the fetched-so-far log is re-censused
@@ -696,55 +812,27 @@ def run_crawl(
         rnd = _resume_from
         seq_next = man["seq_next"]
         pages_enqueued = man["pages_enqueued"]
-        # drop partial artifacts of the interrupted round: the manifest
-        # marks round r complete only after enqueue_{r+1}; anything newer
-        # is a torn write whose children were never enqueued (with the
-        # parquet backend, orphaned staging dirs too; Iceberg commits are
-        # atomic so cleanup_staging is a no-op there)
-        io.cleanup_staging()
-        for name in io.list_names():
-            for prefix, first_stale in (("fetched_", rnd), ("blocked_", rnd),
-                                        ("enqueue_", rnd + 1)):
-                if name.startswith(prefix):
-                    try:
-                        num = int(name[len(prefix):])
-                    except ValueError:
-                        continue
-                    if num >= first_stale:
-                        io.delete_stale(name)
+        seen_rows = man["seen_rows"]
+        n_frontier = man["n_frontier"]
+        _drop_torn_round(io, rnd)
         seen_names = io.list_names("enqueue_")
         all_enq = io.read(*seen_names)
-        # bounded count (parquet metadata scan) feeding the same adaptive
-        # filter gate the cold-start path uses
-        seen_rows = all_enq.count()
         bloom = None
         if seen_rows >= cfg.bloom_min_seen_rows:
             bloom = _absorb_filter(all_enq, _new_seen_filter(cfg))
-        # frontier = admitted ∖ already-fetched (politeness deferral included)
-        fetched_names = io.list_names("fetched_")
-        admitted_all = all_enq.filter(F.col("admitted")).select(*FRONTIER_COLS)
-        if fetched_names:
-            done = io.read(*fetched_names).select("url")
-            for b in io.list_names("blocked_"):
-                done = done.unionByName(io.read(b).select("url"))
-            frontier = admitted_all.join(done, on="url", how="left_anti")
-        else:
-            frontier = admitted_all
-        fstats: dict = {}
-        frontier = io.write(frontier, "frontier", observe=_count_aggs(),
-                            obs_out=fstats)
-        n_frontier = int(fstats["n_rows"])
+        # the frontier round rnd-1 handed over: the rows it admitted
+        # (picked by column, so a compacted enqueue_0 serves too) ∪ the
+        # rows its gate deferred
+        frontier = all_enq.filter(
+            F.col("admitted") & (F.col("enqueue_round") == rnd)
+        ).select(*FRONTIER_COLS)
+        if io.exists(f"gate_{rnd - 1}"):
+            frontier = _deferred(io.read(f"gate_{rnd - 1}")).unionByName(frontier)
     seen_filter_log: List[dict] = []
     while rnd < max_rounds and n_frontier > 0:
         t = time.perf_counter()
 
-        # [EXTENSION] in-loop trap refresh: re-census the fetched log every
-        # trap_refresh_rounds rounds; the scan is column-pruned to
-        # (url, fingerprint) and the exchange carries (template,
-        # fingerprint) pairs only (PLANS.md trap-census shape); the bounded
-        # flagged set checkpoints as trap_census (crash-safe replace) so
-        # resume restores the gate and the per-round broadcast join below
-        # reads a tiny table instead of recomputing the census
+        # [EXTENSION] in-loop trap refresh (see trap_refresh_rounds above)
         if (trap_refresh_rounds > 0 and rnd > 0
                 and rnd % trap_refresh_rounds == 0):
             fetched_logs = io.list_names("fetched_")
@@ -772,139 +860,32 @@ def run_crawl(
 
         seen = io.read(*seen_names).select("url")
 
-        # spider-trap + robots gates [EXTENSION] — one blocked_{rnd} log
-        # for both (status column distinguishes); blocked URLs stay seen
-        def _blocked_log(df, status):
-            return df.select(
-                "url", "kind", "depth", "seq", "host",
-                F.lit(rnd).alias("round"),
-                F.lit(status).alias("status"),
-                F.lit(0).cast("long").alias("size"),
+        # spider-trap / robots / redirect / host-slot gates [EXTENSION],
+        # evaluated ONCE: gate_<rnd> holds every frontier row with its
+        # verdict, and J1, the skip log and the next frontier are filtered
+        # reads of it (its deferred count rides the write)
+        gate, n_deferred, fetch_now = None, 0, frontier
+        if (politeness_mode or trap_gate_tbl is not None
+                or redirect_map is not None):
+            gstats: dict = {}
+            gate = io.write(
+                _gate_frame(frontier, cfg, trap_gate_tbl, robots,
+                            redirect_map, host_slots),
+                f"gate_{rnd}", cfg.retry,
+                observe=[F.count_if(F.col("verdict") == DEFER).alias("n_deferred")],
+                obs_out=gstats,
             )
-
-        allowed = frontier
-        blocked_parts = []
-        if trap_gate_tbl is not None:
-            allowed, trapped = split_by_traps(allowed, trap_gate_tbl)
-            blocked_parts.append(_blocked_log(trapped, "skipped_trap"))
-        if robots is not None:
-            allowed, rblocked = apply_robots(allowed, robots)
-            blocked_parts.append(_blocked_log(rblocked, "skipped_robots"))
-        if redirects is not None:
-            # [EXTENSION] pre-fetch redirect resolution: ONE join against
-            # the pre-materialized source mapping (redirect_map above) —
-            # the round lineage carries no distinct, no edge normalization
-            # and no jump-table joins (plan-asserted in PLANS.md). Rows
-            # whose URL is not a redirect source pass with NULL _final.
-            from go_crawler_spark.operators.redirects import (
-                STATUS_BLOCKED_HOP,
-                STATUS_STOPPED,
-                apply_redirect_mapping,
-            )
-
-            allowed = apply_redirect_mapping(allowed, redirect_map)
-            rstop = F.col("_rstatus") == F.lit(STATUS_STOPPED)
-            rhop = F.col("_rstatus") == F.lit(STATUS_BLOCKED_HOP)
-            blocked_parts.append(_blocked_log(
-                allowed.filter(rstop).drop("_final", "_rstatus"),
-                "skipped_redirect",
-            ))
-            # chains aborted at a robots-disallowed INTERMEDIATE hop (the
-            # mapping pre-bakes per-hop enforcement; see redirect_map
-            # above) — same per-request status as the alias/target gates.
-            # Gated on robots: a mapping built without rules can never
-            # carry the status, so the extra frontier-scan branch of the
-            # blocked-log union would be pure per-round overhead.
-            if robots is not None:
-                blocked_parts.append(_blocked_log(
-                    allowed.filter(rhop).drop("_final", "_rstatus"),
-                    "skipped_robots",
-                ))
-            # The request lands on the RESOLVED host, so politeness slots
-            # and the per-request robots re-check must bound the TARGET —
-            # but that host lives in a politeness-only column (_fetch_host):
-            # the frontier's own `host` stays the ALIAS host, because
-            # deferred rows roll into the NEXT round's pre-redirect
-            # robots/trap gates, which pair rules with the alias URL's
-            # path (a target-host/alias-path mix wrongly blocked aliases
-            # whose path the target host disallows). The when() sits
-            # INSIDE the UDF argument so unredirected rows ship NULL
-            # across Arrow (same trick as the parse UDF below).
-            redirected = F.col("_final").isNotNull()
-            allowed = (
-                allowed.filter(
-                    F.col("_rstatus").isNull() | ~(rstop | rhop)
+            n_deferred = int(gstats["n_deferred"])
+            fetch_now = gate.filter(F.col("verdict") == FETCH).drop("verdict")
+            if redirect_map is not None:
+                # the request goes to the target, whose host the fetched
+                # log records; the url identity is restored after J1's join
+                fetch_now = fetch_now.select(
+                    F.col("_fetch_url").alias("url"), "kind", "depth", "seq",
+                    F.col("_fetch_host").alias("host"),
+                    F.col("url").alias("_orig_url"),
                 )
-                .withColumn("_fetch_url", F.coalesce("_final", "url"))
-                .withColumn(
-                    "_fetch_host",
-                    F.when(
-                        redirected,
-                        registrable_host_udf(
-                            F.when(redirected, F.col("_final"))
-                        ),
-                    ).otherwise(F.col("host")),
-                )
-                .drop("_final", "_rstatus")
-            )
-            if robots is not None:
-                # robots applies per-REQUEST: a redirect into a disallowed
-                # path is blocked even when the alias itself is allowed
-                # (re-checking unredirected rows is idempotent — they
-                # already passed above). Intermediate hops were already
-                # enforced when the mapping was materialized
-                # (blocked_hop_targets above), so together the three
-                # gates cover every request of the chain: alias (pre-
-                # redirect gate), hops 2..n-1 (mapping), final target
-                # (this re-check).
-                chk = (
-                    allowed.withColumnRenamed("url", "_orig_url")
-                    .withColumnRenamed("_fetch_url", "url")
-                )
-                ok2, rb2 = apply_robots(chk, robots, host_col="_fetch_host")
-
-                def _restore(d: DataFrame) -> DataFrame:
-                    return (
-                        d.withColumnRenamed("url", "_fetch_url")
-                        .withColumnRenamed("_orig_url", "url")
-                    )
-
-                blocked_parts.append(
-                    _blocked_log(
-                        _restore(rb2).drop("_fetch_url"), "skipped_robots"
-                    )
-                )
-                allowed = _restore(ok2)
-        if blocked_parts:
-            blk = blocked_parts[0]
-            for b in blocked_parts[1:]:
-                blk = blk.unionByName(b)
-            io.write(blk, f"blocked_{rnd}")
-        t = _tick("robots", t)
-
-        # politeness split [EXTENSION] — under redirects the split keys on
-        # the TARGET host (the request lands there), swapped in for the
-        # duration of the split only
-        if redirects is not None:
-            allowed = (
-                allowed.withColumnRenamed("host", "_alias_host")
-                .withColumnRenamed("_fetch_host", "host")
-            )
-        fetch_now, deferred = assign_fetch_slots(
-            allowed, cfg.host_slots_per_round, cfg.politeness_salts,
-            host_slots=host_slots,  # e.g. robots Crawl-delay -> slots/round
-        )
-        if redirects is not None:
-            # deferred rows roll over AS ALIASES: restore the alias host so
-            # the next round's pre-redirect robots/trap gates see
-            # (alias host, alias path); the resolution re-applies there
-            # (one cheap mapping join). fetch_now keeps the target host —
-            # the fetched log records the host the request actually hit.
-            deferred = (
-                deferred.withColumn("host", F.col("_alias_host"))
-                .drop("_alias_host", "_fetch_url")
-            )
-            fetch_now = fetch_now.drop("_alias_host")
+        t = _tick("gate", t)
 
         # J1 — fetch + size gate + ONE fused parse producing children AND
         # the rewritten page bytes (P1-P6 + T1 in a single Arrow pass — the
@@ -912,28 +893,11 @@ def run_crawl(
         # main.go:207; a skipped page parses to nothing). save_path (S5)
         # lands here too, so the fetched log doubles as the pages sink —
         # pages_out is a column-pruned view of these files, not a second
-        # copy.
-        #
-        # hits is deliberately NOT persisted: its second consumer (the miss
-        # anti-join) needs only the url column, so the recompute is a
-        # column-pruned corpus scan + join — all JVM, no Python — while an
-        # on-heap cache of the full hit content (html+text) measurably
-        # costs more in GC than the pruned rescan saves (~2 GB of columnar
-        # cache per 100k pages).
+        # copy. hits is deliberately NOT persisted (operators/fetch.py).
         bcast = n_frontier <= cfg.broadcast_fetch_max_rows
-        if redirects is not None:
-            # fetch the resolved target's content under the ORIGINAL url
-            # identity (see docstring): swap url/_fetch_url around the
-            # corpus join, restore after
-            fetch_in = (
-                fetch_now.withColumnRenamed("url", "_orig_url")
-                .withColumnRenamed("_fetch_url", "url")
-            )
-        else:
-            fetch_in = fetch_now
-        hits = fetch_hits(fetch_in, pages, broadcast_frontier=bcast)
+        hits = fetch_hits(fetch_now, pages, broadcast_frontier=bcast)
         fetched = fetch_round(
-            fetch_in, hits, cfg.max_file_size, broadcast_frontier=bcast
+            fetch_now, hits, cfg.max_file_size, broadcast_frontier=bcast
         ).withColumn("round", F.lit(rnd))
         if redirects is not None:
             fetched = (
@@ -977,6 +941,8 @@ def run_crawl(
             )
             .drop("_p")
         )
+        if gate is not None:
+            fetched = fetched.unionByName(_skip_log(gate, fetched.schema, rnd))
         # the child count rides the write as an observed metric: it sizes
         # the J2 scheduler below without a count job
         jstats: dict = {}
@@ -1079,24 +1045,22 @@ def run_crawl(
             bloom = _absorb_filter(io.read(*seen_names), _new_seen_filter(cfg))
         t = _tick("absorb", t)
 
-        admitted = enq.filter(F.col("admitted")).select(*FRONTIER_COLS)
-        if politeness_mode:
-            fstats: dict = {}
-            frontier = io.write(
-                deferred.select(*FRONTIER_COLS).unionByName(admitted),
-                "frontier", observe=_count_aggs(), obs_out=fstats,
-            )
-            n_frontier = int(fstats["n_rows"])
-        else:
-            frontier = admitted
-            n_frontier = n_admitted
-        t = _tick("frontier", t)
+        # next frontier: this round's admitted rows ∪ its gate-deferred
+        # rows — a read, sized by the two observed counts
+        frontier = enq.filter(F.col("admitted")).select(*FRONTIER_COLS)
+        if gate is not None:
+            frontier = _deferred(gate).unionByName(frontier)
+        n_frontier = n_admitted + n_deferred
 
         io.put_manifest(
             {"round": rnd, "seq_next": seq_next, "pages_enqueued": pages_enqueued,
+             "seen_rows": seen_rows, "n_frontier": n_frontier,
              "config": {"max_count": cfg.max_count, "max_depth": cfg.max_depth,
                         "host_slots_per_round": cfg.host_slots_per_round}},
         )
+        # the previous round's gate fed only this round's frontier
+        if rnd > 0:
+            io.delete(f"gate_{rnd - 1}")
         # every frame that outlives the round (enq, frontier) is a parquet
         # re-read by now — free the scheduler checkpoints, or each round
         # leaks one materialized frontier copy in executor storage
@@ -1137,15 +1101,15 @@ def _assemble_result(spark: SparkSession, io, workdir: str, rounds: int, cfg: Cr
         "url", "kind", "depth", "seq", "host", "enqueue_round"
     )
 
+    # the fetched log holds the gate-skipped rows too (their skip status,
+    # no content); the pages sink and the metrics count fetches only
     raw_fetched = union_all("fetched_")
     fetched = None
     if raw_fetched is not None:
         fetched = raw_fetched.select(
             "url", "kind", "depth", "seq", "host", "round", "status", "size"
         )
-        blocked = union_all("blocked_")
-        if blocked is not None:
-            fetched = fetched.unionByName(blocked)
+        raw_fetched = raw_fetched.filter(~F.col("status").isin(*GATE_SKIPS))
 
     # S4/S5/T1 sink: the fetched log already holds the rewritten html and
     # save_path (fused into J1), so the sink table is a column-pruned VIEW

@@ -1,6 +1,6 @@
 """Table IO shim: parquet-directory checkpoints or Iceberg tables.
 
-The crawl loop's per-round state (enqueue/fetched/blocked/frontier logs +
+The crawl loop's per-round state (enqueue/gate/fetched logs +
 a manifest) goes through this interface (SURVEY §7 step 1; the north rule
 names Iceberg as the production table format):
 

@@ -91,19 +91,18 @@ def test_loop_and_long_chain_blocked(result, spark):
 
 
 def test_blocked_log_status(result, spark):
-    import os
-
+    """Gate-skipped rows land in the round's fetched_<r> checkpoint with
+    their skip status, size 0 and no content."""
     from go_crawler_spark.tableio import make_tableio
 
     io = make_tableio(spark, result.workdir)
-    names = io.list_names("blocked_")
+    names = io.list_names("fetched_")
     assert names
-    blocked = {
-        (r["url"], r["status"])
-        for r in io.read(*names).select("url", "status").collect()
-    }
+    log = io.read(*names).filter(F.col("status").startswith("skipped_r"))
+    blocked = {(r["url"], r["status"]) for r in log.collect()}
     assert (f"{H}/loop0.html", "skipped_redirect") in blocked
     assert (f"{H}/long0.html", "skipped_redirect") in blocked
+    assert log.filter((F.col("size") != 0) | F.col("html").isNotNull()).count() == 0
 
 
 def test_direct_page_unaffected(result):

@@ -72,6 +72,16 @@ def test_delay_oracle_integer_column(ducks):
     assert str(pdf["delay_ms"].dtype) == "int64"
 
 
+def test_inverted_index_postings_are_strings(ducks):
+    """The postings head reaches pandas as one comma-joined string per
+    row: a list cell is unhashable, so sorting or deduplicating the
+    frame would fail."""
+    pdf = ducks.sql(entry_mod.oracle_sql()["inverted_index_terms"]).df()
+    assert len(pdf) and all(isinstance(v, str) for v in pdf["postings"])
+    assert all(v.split(",") == sorted(v.split(","), key=int)
+               for v in pdf["postings"])
+
+
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_queries_run(spark, name):
     df = entry_mod.queries()[name](spark, SF_SMALL)

@@ -249,6 +249,22 @@ def test_robots_sitemap_refs_edges(spark):
     ]
 
 
+def test_rfc_verdict_on_other_columns(spark):
+    """The crawl re-checks a redirect's target: the URL and host sit in
+    other columns than the rules table's ``host``."""
+    from go_crawler_spark.operators.politeness import robots_blocked
+
+    rules = parse_robots_rules(spark.createDataFrame(
+        [("b.com", "User-agent: *\nDisallow: /x\n")], "host string, body string"))
+    fr = spark.createDataFrame(
+        [("https://a.com/x", "a.com", "https://b.com/x", "b.com"),
+         ("https://b.com/x", "b.com", "https://a.com/x", "a.com")],
+        "url string, host string, _fetch_url string, _fetch_host string")
+    out = robots_blocked(fr, rules, host_col="_fetch_host", url_col="_fetch_url")
+    assert sorted((r["url"], r["robots_blocked"]) for r in out.collect()) == [
+        ("https://a.com/x", True), ("https://b.com/x", False)]
+
+
 class TestPrefixGate:
     """The simple ``(host, disallow_prefix)`` shape of
     :func:`go_crawler_spark.operators.politeness.apply_robots`: a

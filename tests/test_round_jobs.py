@@ -32,13 +32,17 @@ SEED = 42
 # (J1 fetched write 4, J2 enqueue write 2, J3 absorb 0: filter dormant)
 PLAIN_ROUNDS, PLAIN_JOBS = 4, 25
 # host slots + robots + an active seen filter, 2 rounds: enqueue_0 (1) +
-# 2 x 20 (blocked write 2, J1 9, J2 2, J3 absorb 1, frontier write 6)
-POLITE_ROUNDS, POLITE_JOBS = 2, 41
-# resume of that checkpoint for 2 more rounds: 12 before the loop (7
-# schema inferences, one per table the resume meets first: enqueue_0-2,
-# fetched_0/1, blocked_0/1; the seen-row count 2; the filter rebuild 1;
-# the frontier write 2) + 2 x 20
-RESUME_ROUNDS, RESUME_JOBS = 4, 52
+# 2 x 11 (gate_<r> write 4: the robots broadcast, the two slot-window
+# shuffles and the write; J1 4, as in a plain round, since it reads the
+# verdicts; J2 2; J3 absorb 1). The next frontier is a read of gate_<r>
+# and enqueue_<r+1>, not a write.
+POLITE_ROUNDS, POLITE_JOBS = 2, 23
+# resume of that checkpoint for 2 more rounds: 5 before the loop (4
+# schema inferences, one per table the resume meets first: enqueue_0-2
+# and gate_1; the filter rebuild 1; no count() and no frontier write:
+# the manifest holds the seen-row count and the frontier size) + 2 x 11
+# + 2 schema inferences when the result reads fetched_0/1
+RESUME_ROUNDS, RESUME_JOBS = 4, 29
 
 
 @pytest.fixture(scope="module")

@@ -647,7 +647,7 @@ def test_pct_normalize_matches_python_model_random(spark):
     def py_norm(s: str) -> str:
         parts = s.split("%")
         out = [parts[0]]
-        for p in parts[1:]:
+        for i, p in enumerate(parts[1:], start=2):
             hx = p[:2]
             if len(hx) == 2 and all(c in "0123456789abcdefABCDEF" for c in hx):
                 code = int(hx, 16)
@@ -656,6 +656,8 @@ def test_pct_normalize_matches_python_model_random(spark):
                     out.append(chr(code) + p[2:])
                 else:
                     out.append("%" + hx.upper() + p[2:])
+            elif len(p) < 2 and i < len(parts):
+                out.append("%25" + p)  # a stray % that is not the last
             else:
                 out.append("%" + p)
         return "".join(out)

@@ -314,8 +314,9 @@ def test_rfc3986_normalize_collapses_seen_identity(spark):
 
 def test_rfc3986_normalize_idempotent(spark):
     """Normalizing twice equals normalizing once: the host is lowercased
-    AFTER percent-decoding (``ex%41mple`` → ``example``), and the hex of
-    a percent-triplet left in the host stays upper."""
+    AFTER percent-decoding (``ex%41mple`` → ``example``), the hex of
+    a percent-triplet left in the host stays upper, and a stray ``%``
+    that a decoded character could complete is emitted as ``%25``."""
     from pyspark.sql import functions as F
 
     from go_crawler_spark.functions.urls import rfc3986_normalize_expr
@@ -326,6 +327,9 @@ def test_rfc3986_normalize_idempotent(spark):
         ("https://u%41@H%c3%A9.EX:443?q", "https://uA@h%C3%A9.ex/?q"),
         ("http://ex%2dample.com", "http://ex-ample.com/"),
         ("mailto:Joe%41@x", "mailto:JoeA@x"),
+        # a stray % whose decoded successors would complete a triplet
+        ("http://a.com/%%34%31", "http://a.com/%2541"),
+        ("http://a.com/%4%31x%", "http://a.com/%2541x%"),
     ]
     df = spark.createDataFrame(cases, "u string, want string")
     once = df.select("u", "want", rfc3986_normalize_expr(F.col("u")).alias("n1"))
