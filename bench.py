@@ -394,7 +394,7 @@ def bench_once(cpus: int, sf_dir: str) -> dict:
     try:
         # corpus generated once to tmpfs parquet (untimed), then CACHED
         # on-heap for the timed round. Settled by a measured A/B at this
-        # exact configuration (tools/bench_ab.py, 3 interleaved reps/arm,
+        # exact configuration (3 interleaved reps/arm,
         # local[32], 120k pages, 12g heap — BENCH/BASELINE.md "Headline
         # protocol A/B"): cache median 31.0 s (30.9-33.9) vs tmpfs-scan
         # median 42.9 s (32.4-61.1); the scan arm re-pays the corpus read
@@ -530,8 +530,7 @@ def scaling_report(sf_dir: str) -> None:
     # between 0.68 and 0.95 across sessions with no code change). With the
     # pair interleaved [1,4]×3, luck hits both levels alike and best-of-3
     # approaches each level's true floor — the same fix the headline A/B
-    # used (tools/bench_ab.py). local[32] (reported for peak only, not
-    # graded) runs 2 reps at the end.
+    # used. local[32] (reported for peak only) runs 2 reps at the end.
     schedule = [1, 4, 1, 4, 1, 4, 32, 32]
     results: dict[int, dict] = {}
     reps_log: dict[int, list] = {1: [], 4: [], 32: []}
@@ -714,7 +713,7 @@ def scaling_report(sf_dir: str) -> None:
         "Round 2's last commit switched the 120k-page headline frontier",
         "round from an on-heap corpus .cache() to a tmpfs-parquet re-scan,",
         "claiming 2-4x faster; the driver then measured the headline 1.8x",
-        "SLOWER. Settled by tools/bench_ab.py at the driver's exact",
+        "SLOWER. Settled by an interleaved A/B at the headline's exact",
         "configuration (local[32], 120k pages, heap_gb_for_round=12g,",
         "fresh process per rep, 3 INTERLEAVED reps per arm so",
         "JVM-placement luck cannot land on one arm):",

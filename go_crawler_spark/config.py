@@ -16,11 +16,6 @@ def _env_int(name: str, default: int) -> int:
     return int(v) if v else default
 
 
-def _env_float(name: str, default: float) -> float:
-    v = os.environ.get(name)
-    return float(v) if v else default
-
-
 @dataclass(frozen=True)
 class RetryConfig:
     """ref: pkg/retry/retry.go:82-93 — 3 attempts, 1s delay, 3s cap,
@@ -41,14 +36,15 @@ class RetryConfig:
 
 @dataclass(frozen=True)
 class CrawlConfig:
-    """ref: internal/config.go:29-37 defaults (MaxCount=100, MaxConcurrent=10,
-    Timeout=30s, MaxFileSize=64MB). Fields marked [EXTENSION] implement
-    north-rule capabilities absent from the reference (depth limit,
-    politeness, bloom filter, checkpointing).
+    """ref: internal/config.go:29-37 defaults (MaxCount=100,
+    Timeout=30s, MaxFileSize=64MB). The reference's MaxConcurrent has no
+    field: Spark's task scheduler runs the work and ``shuffle_partitions``
+    sets its parallelism. Fields marked [EXTENSION] implement north-rule
+    capabilities absent from the reference (depth limit, politeness,
+    bloom filter, checkpointing).
     """
 
     max_count: int = 100            # page budget; seed counts (queue.go:101-106)
-    max_concurrent: int = 10        # maps to shuffle/repartition parallelism
     max_file_size: int = 64 * 1024 * 1024  # bytes (config.go:37)
     output_dir: str = "./out"
     retry: RetryConfig = field(default_factory=RetryConfig)
@@ -59,22 +55,15 @@ class CrawlConfig:
     politeness_salts: int = 8       # salt count for skewed-host windows
     bloom_bits: int = 1 << 20       # bloom filter size in bits
     bloom_hashes: int = 5
-    use_bloom: bool = True
+    use_bloom: bool = True          # the bloom seen filter on/off
     # Activate the seen filter only once the seen log holds this many rows.
     # Below it the exact anti-join's build side broadcasts (no shuffle for
     # the bloom to prune) and the filter's two Arrow passes per round are
     # pure overhead — measured 35.5 s -> 20.7 s on the 48k-page flagship
     # bench. 0 = always on (tests that pin the filter path set this).
     bloom_min_seen_rows: int = 500_000
-    seen_filter: str = "bloom"      # "bloom" | "cuckoo" | "none"; cuckoo
-                                    # supports delete (TTL re-crawl retirement)
-    cuckoo_buckets: int = 1 << 18   # × 4 slots = ~1M fingerprint capacity
     shuffle_partitions: int = 32
     frontier_buckets: int = 32      # partitioning of frontier/seen by xxhash64(url)
-    table_backend: str = "parquet"  # "parquet" | "iceberg" | "auto" — per-round
-                                    # state tables (go_crawler_spark/tableio.py)
-    iceberg_catalog: str = "crawl"
-    iceberg_namespace: str = "state"
     broadcast_fetch_max_rows: int = 5_000_000
     # fetch-join strategy gate: frontier rounds up to this many rows are
     # broadcast into the corpus scan (~100s of MB of URLs); beyond it the
@@ -104,7 +93,6 @@ class CrawlConfig:
         (ref: internal/config.go:25-57)."""
         base = dict(
             max_count=_env_int("CRAWLER_MAX_COUNT", 100),
-            max_concurrent=_env_int("CRAWLER_MAX_CONCURRENT", 10),
             max_file_size=_env_int("CRAWLER_MAX_FILE_SIZE", 64 * 1024 * 1024),
             output_dir=os.environ.get("CRAWLER_OUTPUT_DIR", "./out"),
         )
@@ -117,16 +105,10 @@ class CrawlConfig:
         """ref: internal/config.go:59-83 — positivity + non-empty checks."""
         if self.max_count <= 0:
             raise ValueError("max_count must be positive")
-        if self.max_concurrent <= 0:
-            raise ValueError("max_concurrent must be positive")
         if self.max_file_size <= 0:
             raise ValueError("max_file_size must be positive")
         if not self.output_dir:
             raise ValueError("output_dir must be non-empty")
-        if self.seen_filter not in ("bloom", "cuckoo", "none"):
-            raise ValueError("seen_filter must be bloom|cuckoo|none")
         if self.bloom_min_seen_rows < 0:
             raise ValueError("bloom_min_seen_rows must be >= 0")
-        if self.table_backend not in ("parquet", "iceberg", "auto"):
-            raise ValueError("table_backend must be parquet|iceberg|auto")
         self.retry.validate()

@@ -21,11 +21,10 @@ from __future__ import annotations
 
 import re
 from html.parser import HTMLParser
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 import pandas as pd
 import pyarrow  # noqa: F401  (assert Arrow availability early)
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -458,17 +457,6 @@ EXTRACT_SCHEMA = ArrayType(
         ]
     )
 )
-RAW_EXTRACT_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("tag", StringType()),
-            StructField("src", StringType()),
-            StructField("pos", IntegerType()),
-        ]
-    )
-)
-
-
 @pandas_udf(EXTRACT_SCHEMA)
 def extract_resolved_udf(page_url: pd.Series, html: pd.Series) -> pd.Series:
     """P1+P2+P3+P4+P5+P6 fused in one Arrow batch pass: html bytes →
@@ -481,21 +469,6 @@ def extract_resolved_udf(page_url: pd.Series, html: pd.Series) -> pd.Series:
             for u, h in zip(page_url, html)
         ],
         dtype=object,
-    )
-
-
-@pandas_udf(RAW_EXTRACT_SCHEMA)
-def extract_raw_udf(html: pd.Series) -> pd.Series:
-    return pd.Series(
-        [extract_resources_raw(h) if h is not None else [] for h in html],
-        dtype=object,
-    )
-
-
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return pd.Series(
-        [extract_text(h) if h is not None else "" for h in html], dtype=object
     )
 
 
@@ -522,17 +495,6 @@ def parse_page_udf(page_url: pd.Series, html: pd.Series) -> pd.DataFrame:
             children.append(c)
             html_out.append(ho)
     return pd.DataFrame({"children": children, "html_out": html_out})
-
-
-@pandas_udf(BinaryType())
-def rewrite_html_udf(html: pd.Series, page_url: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            rewrite_html(h, u) if (h is not None and u is not None) else h
-            for h, u in zip(html, page_url)
-        ],
-        dtype=object,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -113,10 +113,6 @@ def fingerprint_md5(col: Column) -> Column:
     return F.md5(normalize_for_fingerprint(col))
 
 
-def fingerprint_xxhash(col: Column) -> Column:
-    return F.xxhash64(normalize_for_fingerprint(col))
-
-
 def _bound_once(expr: Column, body) -> Column:
     """Evaluate ``expr`` once per row and pass it to ``body`` as a lambda
     variable. An expression referenced inside a higher-order-function lambda
@@ -124,23 +120,6 @@ def _bound_once(expr: Column, body) -> Column:
     which turns an O(len) shingle pass into O(len²) regex work; binding via
     a 1-element array + transform forces single evaluation."""
     return F.get(F.transform(F.array(expr), body), 0)
-
-
-def char_ngrams(col: Column, n: int = 3) -> Column:
-    """Array of character n-grams of the normalized text (JVM-side:
-    sequence + transform + substring; normalization evaluated once/row)."""
-    return _bound_once(
-        normalize_for_fingerprint(col),
-        lambda norm: F.when(
-            F.length(norm) - (n - 1) < 1, F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                # guard: sequence(1, 0) would be the DESCENDING [1, 0]
-                F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(1))),
-                lambda i: norm.substr(i, F.lit(n)),
-            )
-        ),
-    )
 
 
 def token_ngrams(col: Column, n: int = 3) -> Column:

@@ -18,7 +18,7 @@ import functools
 import hashlib
 import posixpath
 import re
-from typing import Iterator, Optional
+from typing import Optional
 from urllib.parse import urljoin, urlsplit, urlunsplit
 
 import pandas as pd
@@ -331,11 +331,6 @@ def canonicalize_udf(page_url: pd.Series, src: pd.Series) -> pd.Series:
 
 
 @pandas_udf(StringType())
-def host_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: host_of(u) if u is not None else "")
-
-
-@pandas_udf(StringType())
 def registrable_host_udf(url: pd.Series) -> pd.Series:
     return url.map(lambda u: registrable_host(u) if u is not None else "")
 
@@ -348,12 +343,6 @@ def page_save_path_udf(url: pd.Series) -> pd.Series:
 @pandas_udf(StringType())
 def asset_save_path_udf(url: pd.Series) -> pd.Series:
     return url.map(asset_save_path)
-
-
-def with_url_hash(df, url_col: str = "url", out_col: str = "url_hash"):
-    """64-bit identity hash for frontier/seen partitioning [EXTENSION —
-    north rule mandates xxhash64]. JVM-side built-in, no Python."""
-    return df.withColumn(out_col, F.xxhash64(F.col(url_col)))
 
 
 # ---------------------------------------------------------------------------

@@ -22,7 +22,7 @@ from typing import Iterator, Optional, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
@@ -104,7 +104,7 @@ def _with_hashes(df: DataFrame, key: str) -> DataFrame:
 
 
 def tree_build_filter(df: DataFrame, key: str, proto, fan_in: int = 16):
-    """Build a seen-filter (bloom/cuckoo — anything exposing
+    """Build a seen-filter (a :class:`BloomFilter`, or anything exposing
     add_many/merge/fresh) over ``df[key]`` with a TWO-LEVEL TREE merge:
     every input partition builds its own filter at full parallelism in one
     Arrow pass, partitions hash into ≤``fan_in`` combiner tasks that merge
@@ -158,20 +158,11 @@ def tree_build_filter(df: DataFrame, key: str, proto, fan_in: int = 16):
     return merged
 
 
-def build_bloom(
-    seen: DataFrame, key: str, n_bits: int, n_hashes: int, fan_in: int = 16
-) -> BloomFilter:
-    """Build a bloom over ``seen[key]`` via the tree merge (see
-    ``tree_build_filter``; the former flat one-bitset-per-partition
-    driver collect is gone)."""
-    return tree_build_filter(seen, key, BloomFilter(n_bits, n_hashes), fan_in=fan_in)
-
-
 def bloom_prefilter(candidates: DataFrame, filt, key: str) -> DataFrame:
     """Split candidates into (definitely-new, maybe-seen): rows whose hashes
     miss the filter cannot be in ``seen`` and skip the anti-join shuffle.
-    ``filt`` is any seen-filter object exposing ``might_contain(h1, h2)``
-    (BloomFilter or operators.cuckoo.CuckooFilter)."""
+    ``filt`` is a seen-filter exposing ``might_contain(h1, h2)`` (a
+    :class:`BloomFilter`)."""
     spark = candidates.sparkSession
     b = spark.sparkContext.broadcast(filt)
 
@@ -190,7 +181,7 @@ def dedup_against_seen(
     bloom=None,
     mark_definite: str | None = None,
 ) -> DataFrame:
-    """Full Q1 cross-round path: optional bloom/cuckoo prune, exact
+    """Full Q1 cross-round path: optional bloom prune, exact
     anti-join confirm, union of definite-new and confirmed-new.
 
     ``mark_definite``: when set, the output carries a boolean column of

@@ -225,47 +225,6 @@ def minhash_band_hashes(
     ).withColumnRenamed("_mid", id_col)
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame, id_col: str, n_bands: int = 16, rows_per_band: int = 4
-) -> DataFrame:
-    """Band the signatures and self-join on (band_idx, band_hash) buckets.
-    Returns candidate pairs (id_a < id_b), deduped."""
-    banded = sigs.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda bidx: F.xxhash64(
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice(
-                                F.col("minhash"),
-                                bidx * rows_per_band + 1,
-                                rows_per_band,
-                            ),
-                            lambda x: x.cast("string"),
-                        ),
-                    )
-                ),
-            )
-        ).alias("band_idx", "band_hash"),
-    )
-    left = banded.select(
-        F.col("_id").alias("id_a"), "band_idx", "band_hash"
-    )
-    right = banded.select(
-        F.col("_id").alias("id_b"), "band_idx", "band_hash"
-    )
-    pairs = (
-        left.join(right, on=["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    return pairs
-
-
 def jaccard_verify(
     df: DataFrame,
     pairs: DataFrame,

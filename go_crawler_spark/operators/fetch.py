@@ -27,10 +27,10 @@ Join strategy is SIZE-GATED (``broadcast_frontier``):
   the frontier side). Both sides exchange hash-partitioned on the url —
   an all-to-all of the round's *hit* content, which is unavoidable
   without co-located storage — but never a sort, and never a driver-side
-  collect. With Iceberg, bucketing the corpus by ``xxhash64(url)`` and
-  writing the frontier with the same bucketing upgrades this to a
-  storage-partitioned join (zero corpus shuffle); the shuffle-hash path
-  is the format-agnostic equivalent.
+  collect. Bucketing the corpus by ``xxhash64(url)`` in a table format
+  that declares buckets, and writing the frontier with the same
+  bucketing, upgrades this to a storage-partitioned join (zero corpus
+  shuffle); the shuffle-hash path is the format-agnostic equivalent.
 
 The caller picks the mode from its known frontier row count
 (``CrawlConfig.broadcast_fetch_max_rows``); the driver loop tracks the

@@ -14,8 +14,8 @@ Scale shape:
 - degree counts are single map-side-combined aggregations;
 - PageRank is the canonical iterative-join workload: each iteration is
   ``edges ⋈ ranks`` (shuffle on ``src``) → contribution agg (shuffle on
-  ``dst``). On a cluster, bucket ``edges`` by ``src`` (Iceberg bucket
-  transform or ``repartition(src)`` + persist) so the per-iteration join
+  ``dst``). On a cluster, bucket ``edges`` by ``src`` (a bucketed table
+  or ``repartition(src)`` + persist) so the per-iteration join
   reuses one partitioning; ranks are tiny relative to edges and shuffle
   cheaply. Lineage is truncated per iteration (localCheckpoint) so the
   plan stays O(1) deep — the classic iterative-algorithm requirement.
@@ -128,10 +128,10 @@ def trustrank(
     priority frontier (Q2/priority_frontier_topk) can schedule by either.
 
     ``nodes``: (node) universe; ``edges``: (src, dst); ``seeds``: (node)
-    subset (rows not in ``nodes`` are harmless — they only add teleport
-    mass that immediately flows along their out-edges, and |S| counts
-    them). Deterministic for fixed n_iter (no tolerance exit), so the
-    DuckDB oracle reproduces it join-for-join.
+    trusted set. Seed rows not in ``nodes`` are dropped before |S| is
+    counted: they would get no teleport mass, so counting them would
+    leave the total trust below 1. Deterministic for fixed n_iter (no
+    tolerance exit), so the DuckDB oracle reproduces it join-for-join.
 
     Scale shape: identical to pagerank() — each iteration is one
     edges ⋈ ranks shuffle + one agg on dst; the per-edge 1/outdeg weight
@@ -141,7 +141,9 @@ def trustrank(
     never wider. Lineage is truncated every ``checkpoint_every``
     iterations exactly as pagerank() does.
     """
-    s = seeds.select("node").distinct()
+    s = seeds.select("node").distinct().join(
+        nodes.select("node"), "node", "left_semi"
+    )
     s_count = s.count()
     if s_count == 0:
         # no trust anywhere: the fixed point is identically zero

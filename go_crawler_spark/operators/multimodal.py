@@ -217,20 +217,6 @@ def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     )
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Schema-level resize: updates meta dims, payload passes through the
-    decode seam (stub keeps bytes; a real impl re-encodes)."""
-    return media.withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.mime").alias("mime"),
-            F.lit(width).alias("width"),
-            F.lit(height).alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-        ),
-    )
-
-
 def synthetic_media_df(spark, n: int = 64, seed: int = 42) -> DataFrame:
     """Deterministic fake media corpus for tests/benches."""
     import random

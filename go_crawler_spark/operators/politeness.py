@@ -282,9 +282,12 @@ def adaptive_host_delay(
                             min_delay_ms, max_delay_ms)
 
     A struggling host (slow responses) is automatically backed off;
-    a fast CDN gets the floor. Feed the result into
-    ``assign_fetch_slots(host_slots=...)`` after quantizing delay to
-    slots-per-round — the engine's politeness currency.
+    a fast CDN gets the floor. A host whose every ``response_ms`` is
+    NULL has no evidence of its speed: it gets ``n_obs = 0`` and
+    ``delay_ms = max_delay_ms`` (full back-off), with ANSI on or off.
+    Feed the result into ``assign_fetch_slots(host_slots=...)`` after
+    quantizing delay to slots-per-round — the engine's politeness
+    currency.
 
     ``delay_factor`` is a rational (num, den) and the whole statistic is
     exact integer arithmetic — ``(num · Σ response) div (den · count)``
@@ -305,6 +308,8 @@ def adaptive_host_delay(
     # statistic stays exact past 2^52 (a mega-host's ms-sum at 10^10 rows
     # would already round in an IEEE double)
     raw = F.expr(f"({num} * _sum) div ({den} * _n)")
+    # all-NULL host: _sum is NULL, so the division is skipped (no ANSI
+    # divide-by-zero), raw is NULL, and least/greatest skip it -> max
     delay = F.greatest(
         F.lit(min_delay_ms).cast("long"),
         F.least(F.lit(max_delay_ms).cast("long"), raw),

@@ -10,11 +10,10 @@ built-in JVM expressions only, no Python in the row path.
 
 Scale shape:
 - ``snapshot_diff`` is one full-outer join keyed on the URL. Both sides
-  shuffle on the join key once; with snapshots stored bucketed/partitioned
-  by ``xxhash64(url)`` (the layout ``tableio`` writes and the Iceberg
-  backend declares), the exchange is elided entirely — a
-  storage-partitioned join, the same answer as the fetch join's
-  shuffle-hash fallback (operators/fetch.py). Only (key, fingerprint)
+  shuffle on the join key once; with snapshots stored in a table format
+  that declares buckets on ``xxhash64(url)``, the exchange is elided
+  entirely — a storage-partitioned join, the same answer as the fetch
+  join's shuffle-hash fallback (operators/fetch.py). Only (key, fingerprint)
   enter the exchange — never page bytes.
 - ``recrawl_schedule`` is a map-only expression over per-URL fetch stats
   (one row per URL, no shuffle at all); the caller feeds the due set into

@@ -37,18 +37,12 @@ def release_pending_caches() -> None:
         _PENDING_CACHES.pop().unpersist()
 
 
-# eager local checkpoints created by the range-partition schedulers: each
+# eager local checkpoints created by assign_global_seq's range path: each
 # holds its partitioned rows in executor storage (MEMORY_AND_DISK) with NO
 # lineage behind it — without an explicit release every scheduler call
 # leaks one materialized frontier copy for the life of the session (disk
 # fill at crawl scale: one per round).
 _PENDING_CHECKPOINTS: List = []
-
-
-def _tracked_local_checkpoint(df: DataFrame) -> DataFrame:
-    ck = df.localCheckpoint(eager=True)
-    _PENDING_CHECKPOINTS.append(ck)
-    return ck
 
 
 def unpersist_local_checkpoint(ck: DataFrame) -> None:
@@ -86,63 +80,55 @@ def assign_global_seq(
     ``order_cols`` (which must be a total order — no ties), without a
     single-partition window.
     """
-    out, _ = assign_global_seq_counted(df, order_cols, start, out_col, num_partitions)
-    return out
-
-
-def assign_global_seq_counted(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    start: int = 0,
-    out_col: str = "seq",
-    num_partitions: int | None = None,
-    count_by: str | None = None,
-) -> tuple[DataFrame, dict]:
-    """Like :func:`assign_global_seq` but also returns the group counts the
-    pass-1 job computed anyway — ``{value: n}`` grouped by ``count_by``
-    (or ``{None: total}``), so callers don't pay extra count() jobs.
-    """
-    cols = [F.col(c) for c in order_cols]
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-
-    # pass 1a: cheap global counts (no repartition). Small inputs take the
+    # pass 1: cheap global count (no repartition). Small inputs take the
     # single-partition fast path — range-partition sampling costs two extra
     # passes and only pays off when the batch is large.
-    pre = df.groupBy(count_by).count().collect() if count_by else [
-        {"count": df.count()}
-    ]
-    by_value: dict = {}
-    for r in pre:
-        key = r[count_by] if count_by else None
-        by_value[key] = by_value.get(key, 0) + r["count"]
-    total = sum(by_value.values())
+    if df.count() <= SMALL_INPUT_ROWS:
+        parted = df.coalesce(1).sortWithinPartitions(*[F.col(c) for c in order_cols])
+        return _add_seq(parted, {0: start}, out_col)
+    return _assign_global_seq_ranged(df, order_cols, start, out_col, num_partitions)
 
-    if total <= SMALL_INPUT_ROWS:
-        parted = df.coalesce(1).sortWithinPartitions(*cols)
-        offsets = {0: start}
-    else:
-        # repartitionByRange RESAMPLES boundaries on every action — the
-        # count pass and the assignment pass would see different
-        # partitions. Materialize the partitioning once (eager local
-        # checkpoint): both passes then share identical partitions, and a
-        # lost partition fails the job instead of silently resampling.
-        parted = _tracked_local_checkpoint(
-            df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
-        )
-        counts_df = (
-            parted.withColumn("_pid", F.spark_partition_id()).groupBy("_pid").count()
-        )
-        counts = {r["_pid"]: r["count"] for r in counts_df.collect()}
-        offsets = {}
-        acc = start
-        for pid in range(max(counts.keys(), default=-1) + 1):
-            offsets[pid] = acc
-            acc += counts.get(pid, 0)
 
+def _assign_global_seq_ranged(
+    df: DataFrame,
+    order_cols: Sequence[str],
+    start: int,
+    out_col: str,
+    num_partitions: int | None,
+) -> DataFrame:
+    """The range-partitioned two-pass of :func:`assign_global_seq`, with no
+    up-front count."""
+    cols = [F.col(c) for c in order_cols]
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    # repartitionByRange RESAMPLES boundaries on every action — the
+    # count pass and the assignment pass would see different
+    # partitions. Materialize the partitioning once (eager local
+    # checkpoint): both passes then share identical partitions, and a
+    # lost partition fails the job instead of silently resampling.
+    parted = (
+        df.repartitionByRange(n, *cols)
+        .sortWithinPartitions(*cols)
+        .localCheckpoint(eager=True)
+    )
+    _PENDING_CHECKPOINTS.append(parted)
+    counts_df = (
+        parted.withColumn("_pid", F.spark_partition_id()).groupBy("_pid").count()
+    )
+    counts = {r["_pid"]: r["count"] for r in counts_df.collect()}
+    offsets = {}
+    acc = start
+    for pid in range(max(counts.keys(), default=-1) + 1):
+        offsets[pid] = acc
+        acc += counts.get(pid, 0)
+    return _add_seq(parted, offsets, out_col)
+
+
+def _add_seq(parted: DataFrame, offsets: dict, out_col: str) -> DataFrame:
+    """Pass 2: local cumulative index + broadcast per-partition offset
+    (Arrow batches)."""
     schema = StructType(parted.schema.fields + [StructField(out_col, LongType(), False)])
-    b_offsets = df.sparkSession.sparkContext.broadcast(offsets)
+    b_offsets = parted.sparkSession.sparkContext.broadcast(offsets)
 
-    # pass 2: local cumulative index + broadcast offset (Arrow batches)
     def add_seq(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
@@ -155,7 +141,7 @@ def assign_global_seq_counted(
             local += k
             yield pdf
 
-    return parted.mapInPandas(add_seq, schema), by_value
+    return parted.mapInPandas(add_seq, schema)
 
 
 def assign_seq_admit_budget_bucketed(
@@ -173,11 +159,11 @@ def assign_seq_admit_budget_bucketed(
     every row of b precedes every row of b'; ties within a bucket broken by
     ``order_cols``).
 
-    Versus the range-partition variant this removes ``repartitionByRange``'s
-    sampling job (hash-partitioning by a deterministic bucket expression
-    needs no boundary sampling). The counts pass and the assignment pass are
-    two separate actions, so the partitioned+sorted input is ``persist()``ed
-    here — exchange reuse is per-query and would NOT carry the shuffle
+    Versus the range partitioning of :func:`assign_global_seq` this
+    removes ``repartitionByRange``'s sampling job (hash-partitioning by a
+    deterministic bucket expression needs no boundary sampling). The
+    counts pass and the assignment pass are two separate actions, so the
+    partitioned+sorted input is ``persist()``ed here — exchange reuse is per-query and would NOT carry the shuffle
     across the two actions; without the cache the full upstream lineage
     (in the crawl: fetched-parquet scan → explode → dedup → bloom →
     anti-join) would run twice. The caller should drain
@@ -263,86 +249,6 @@ def assign_seq_admit_budget_bucketed(
     return parted.mapInPandas(verdict, schema)
 
 
-def assign_seq_admit_budget(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    page_budget: int,
-    seq_start: int,
-    kind_col: str = "kind",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Fused Q2 (page budget) + Q3 (global FIFO seq) for large rounds.
-
-    One range-partitioning by the canonical order key, one tiny per-partition
-    counts job, one ``mapInPandas`` emitting both the admission verdict and
-    the contiguous global sequence — replacing the naive
-    ``orderBy().limit(budget)`` (whose TakeOrderedAndProject merges
-    partitions·budget rows on a single task) + refused anti-join + separate
-    seq passes. Semantics are exactly queue.go:88-114: iterate candidates in
-    FIFO order; pages admitted while budget lasts, non-pages always
-    admitted; refused pages keep ``seq = NULL`` (they still enter *seen*,
-    queue.go:92-106).
-
-    Scale shape: per-partition offsets are |partitions| ints on the driver;
-    all row work is partition-local and Arrow-vectorized.
-    """
-    cols = [F.col(c) for c in order_cols]
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # materialize the range partitioning once so the counts pass and the
-    # assignment pass see identical partitions (see assign_global_seq_counted)
-    parted = _tracked_local_checkpoint(
-        df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
-    )
-    counts_df = (
-        parted.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            F.count("*").alias("rows"),
-            F.sum(F.when(F.col(kind_col) == "page", 1).otherwise(0)).alias("pages"),
-        )
-    )
-    counts = {r["_pid"]: (r["rows"], r["pages"]) for r in counts_df.collect()}
-    page_off: dict[int, int] = {}
-    adm_off: dict[int, int] = {}
-    acc_pages, acc_adm = 0, seq_start
-    for pid in range(max(counts.keys(), default=-1) + 1):
-        rows_p, pages_p = counts.get(pid, (0, 0))
-        page_off[pid] = acc_pages
-        adm_pages_p = min(max(page_budget - acc_pages, 0), pages_p)
-        adm_off[pid] = acc_adm
-        acc_adm += (rows_p - pages_p) + adm_pages_p
-        acc_pages += pages_p
-
-    schema = StructType(
-        parted.schema.fields
-        + [StructField("admitted", BooleanType(), False), StructField("seq", LongType(), True)]
-    )
-    b = df.sparkSession.sparkContext.broadcast((page_off, adm_off, page_budget))
-
-    def verdict(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        from pyspark import TaskContext
-
-        p_off, a_off, budget = b.value
-        pid = TaskContext.get().partitionId()
-        page_rank = p_off.get(pid, 0)
-        seq = a_off.get(pid, 0)
-        for pdf in pdf_iter:
-            pdf = pdf.copy()
-            is_page = (pdf[kind_col] == "page").to_numpy()
-            ranks = page_rank + np.cumsum(is_page) - is_page  # exclusive cumsum
-            admitted = (~is_page) | (ranks < budget)
-            seqs = seq + np.cumsum(admitted) - admitted
-            pdf["admitted"] = admitted
-            pdf["seq"] = pd.array(np.where(admitted, seqs, 0), dtype="Int64")
-            pdf.loc[~admitted, "seq"] = pd.NA
-            page_rank += int(is_page.sum())
-            seq += int(admitted.sum())
-            yield pdf
-
-    return parted.mapInPandas(verdict, schema)
-
-
 def priority_schedule(
     df: DataFrame,
     order_cols: Sequence[str],
@@ -359,24 +265,18 @@ def priority_schedule(
     crawler layers on top, and the north-star design names a
     "depth/priority-ordered fetch queue". Semantically equal to
     ``ORDER BY order_cols LIMIT k`` + row_number, but the plan is the
-    range-partitioned two-pass of :func:`assign_seq_admit_budget` — a
-    ``TakeOrderedAndProject`` would merge |partitions|·k rows on ONE task,
-    which at a 10^9-row frontier with k in the millions is a driver-size
-    single point; here the cutoff is decided from per-partition counts and
-    every partition emits its own slice in parallel.
+    range-partitioned two-pass of :func:`assign_global_seq` at every
+    input size — a ``TakeOrderedAndProject`` would merge |partitions|·k
+    rows on ONE task, which at a 10^9-row frontier with k in the millions is a driver-size
+    single point; here every partition numbers its own slice from the
+    per-partition counts and keeps the rows numbered below ``k``.
 
-    ``order_cols`` must be a strict total order (same precondition as the
-    budget scheduler — append a unique tiebreaker like the url hash).
+    ``order_cols`` must be a strict total order (same precondition as
+    :func:`assign_global_seq` — append a unique tiebreaker like the url
+    hash).
     Rows below the cutoff are dropped (they stay in the frontier for later
     rounds; unlike the page budget, "refused by priority" does not mean
     "seen").
     """
-    out = assign_seq_admit_budget(
-        df.withColumn("_pk", F.lit("page")),
-        order_cols,
-        page_budget=k,
-        seq_start=0,
-        kind_col="_pk",
-        num_partitions=num_partitions,
-    )
-    return out.filter(F.col("admitted")).drop("_pk", "admitted")
+    out = _assign_global_seq_ranged(df, order_cols, 0, "seq", num_partitions)
+    return out.filter(F.col("seq") < k)

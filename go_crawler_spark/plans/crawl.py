@@ -6,7 +6,7 @@ One *round* is a single declarative lineage (SURVEY §3.1 Spark lifecycle):
              → fetch join (pages corpus)
              → fused parse UDF (children + rewritten html, one pass)
              → explode → depth filter → within-round first-writer dedup
-             → anti-join seen (bloom/cuckoo-pruned) → fused budget+seq
+             → anti-join seen (bloom-pruned) → fused budget+seq
              → {next frontier, seen ∪, checkpoint}
 
 which replaces the reference's goroutine pipeline (cmd/crawler/main.go:61-90)
@@ -28,11 +28,10 @@ Scale posture (designed for 10^10 URLs / 1000 executors, tested local):
   queue.go:92-106 — so no separate seen write exists);
 - the politeness window is salted two-phase (operators/politeness.py) so a
   mega-host cannot serialize a round;
-- per-round state lands through the table-io shim (tableio.py: parquet
-  atomic-rename by default, Iceberg snapshot commits when a catalog +
-  runtime jar exist) → any round is resumable (C6 [EXTENSION]); lineage
-  is truncated every round so plans stay O(1) deep regardless of crawl
-  length.
+- per-round state lands as parquet checkpoint tables (tableio.py:
+  write-to-temp + atomic rename, the manifest last) → any round is
+  resumable (C6 [EXTENSION]); lineage is truncated every round so plans
+  stay O(1) deep regardless of crawl length.
 
 The scalability constant of an iterative-batch crawler is the number of
 Spark jobs per round: each is a synchronous driver round trip whose fixed
@@ -48,7 +47,7 @@ politeness/robots) runs three checkpoint steps:
                         round's child count rides it as an observed metric
                         and picks J2's scheduler path;
   J2  enqueue write   — depth gate → within-round first-writer dedup
-                        (map-side min_by) → bloom/cuckoo-pruned anti-join
+                        (map-side min_by) → bloom-pruned anti-join
                         vs seen → budget + seq in one fused bucketed pass
                         (operators/sequence.py — no range sampling, no
                         checkpoint copy, no top-K merge); admitted and
@@ -124,6 +123,7 @@ from go_crawler_spark.operators.sequence import (
     release_pending_caches,
     release_pending_checkpoints,
 )
+from go_crawler_spark.tableio import ParquetTableIO
 
 ORDER_COLS = ["parent_seq", "pos"]  # canonical within-round discovery order
 
@@ -150,7 +150,7 @@ class CrawlResult:
     workdir: str
     # per-round seen-filter audit: [{"round", "active", "pruned",
     # "candidates"}] — "candidates" = new-URL rows that survived the
-    # seen-dedup this round, "pruned" = the subset the bloom/cuckoo tier
+    # seen-dedup this round, "pruned" = the subset the bloom tier
     # proved new (they never touched the exact anti-join); rides the
     # enqueue write as an upstream Observation, zero extra jobs. The
     # evidence that the adaptive gate (cfg.bloom_min_seen_rows) fired.
@@ -187,14 +187,13 @@ def _child_aggs() -> list:
     ]
 
 
-# Per-round checkpoint writes go through go_crawler_spark.tableio: the
-# parquet backend is write-to-temp + atomic rename under the workdir; the
-# Iceberg backend (when its catalog + runtime jar exist) publishes atomic
-# snapshot commits instead. Writes run under the reference's retry policy
-# (C1, pkg/retry/retry.go:23-63) — the round-level analog of the reference
-# wrapping download (main.go:150-156) and save (main.go:277-283) — and can
-# carry observed-metric aggregates (a fresh Observation per attempt, so a
-# retried write never reads a failed attempt's metrics).
+# Per-round checkpoint writes go through go_crawler_spark.tableio:
+# write-to-temp + atomic rename under the workdir. Writes run under the
+# reference's retry policy (C1, pkg/retry/retry.go:23-63) — the round-level
+# analog of the reference wrapping download (main.go:150-156) and save
+# (main.go:277-283) — and can carry observed-metric aggregates (a fresh
+# Observation per attempt, so a retried write never reads a failed
+# attempt's metrics).
 
 
 def seeds_enqueue(spark: SparkSession, seeds: List[str], cfg: CrawlConfig) -> DataFrame:
@@ -327,7 +326,7 @@ def _enqueue_large(
 
 def _observe_filter_pruned(new_urls: DataFrame) -> "tuple[DataFrame, Observation]":
     """Attach a free rows-pruned-by-filter counter to the round's enqueue
-    plan: ``new_urls`` carries a ``_definite`` flag (True = the bloom/cuckoo
+    plan: ``new_urls`` carries a ``_definite`` flag (True = the bloom
     tier proved the row new, so it skipped the exact anti-join); an upstream
     ``Observation`` sums it during the write action already happening — no
     extra job, no schema change (the flag is dropped here, before the
@@ -365,17 +364,11 @@ def _filter_obs_counts(obs: Observation) -> "tuple[int, int]":
     return int(row["filter_pruned"]), int(row["filter_candidates"])
 
 
-def _new_seen_filter(cfg: CrawlConfig):
-    """Seen-prefilter per config: bloom (default), cuckoo (supports URL
-    retirement for TTL re-crawls), or none. Both expose the same API
-    (add_many / might_contain / merge / fresh); both are advisory —
-    the exact anti-join always confirms."""
-    if not cfg.use_bloom or cfg.seen_filter == "none":
+def _new_seen_filter(cfg: CrawlConfig) -> Optional[BloomFilter]:
+    """An empty bloom seen-prefilter, or None when ``cfg.use_bloom`` is
+    off. Advisory only: the exact anti-join always confirms."""
+    if not cfg.use_bloom:
         return None
-    if cfg.seen_filter == "cuckoo":
-        from go_crawler_spark.operators.cuckoo import CuckooFilter
-
-        return CuckooFilter(cfg.cuckoo_buckets)
     return BloomFilter(cfg.bloom_bits, cfg.bloom_hashes)
 
 
@@ -553,10 +546,7 @@ def resume_crawl(
     ``trap_census`` table re-arms the trap gate before the first resumed
     round.
     """
-    from go_crawler_spark.tableio import make_tableio
-
-    io = make_tableio(spark, workdir, cfg.table_backend,
-                      cfg.iceberg_catalog, cfg.iceberg_namespace)
+    io = ParquetTableIO(spark, workdir)
     man = _load_manifest(io, workdir)
     return run_crawl(
         spark, pages, [], cfg, robots=robots, workdir=workdir,
@@ -586,10 +576,9 @@ def compact_enqueue_log(
     Compaction is the log-structured-merge answer: row-identical, one
     table, ``buckets`` partitions aligned with the frontier's
     ``xxhash64(url)`` layout so the anti-join's shuffle can be elided by
-    a storage-partitioned join. With the Iceberg backend the replace is
-    a snapshot commit (rollback stays available); with the parquet
-    backend it is the same staged-write + atomic-rename as every other
-    checkpoint write.
+    a storage-partitioned join. The replace is a staged write + atomic
+    renames, healed after a crash like every other checkpoint write
+    (``ParquetTableIO.replace``).
 
     Run on a QUIESCENT checkpoint only (no crawl in flight). Torn
     artifacts of an interrupted round are pruned first — the same
@@ -599,10 +588,7 @@ def compact_enqueue_log(
 
     Returns the number of delta tables that were merged away.
     """
-    from go_crawler_spark.tableio import make_tableio
-
-    io = make_tableio(spark, workdir, cfg.table_backend,
-                      cfg.iceberg_catalog, cfg.iceberg_namespace)
+    io = ParquetTableIO(spark, workdir)
     _drop_torn_round(io, _load_manifest(io, workdir)["round"] + 1)
 
     names = io.list_names("enqueue_")
@@ -692,10 +678,7 @@ def run_crawl(
 
         workdir = tempfile.mkdtemp(prefix="crawl_")
 
-    from go_crawler_spark.tableio import make_tableio
-
-    io = make_tableio(spark, workdir, cfg.table_backend,
-                      cfg.iceberg_catalog, cfg.iceberg_namespace)
+    io = ParquetTableIO(spark, workdir)
 
     politeness_mode = (cfg.host_slots_per_round > 0 or robots is not None
                        or host_slots is not None)

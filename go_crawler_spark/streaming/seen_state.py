@@ -19,7 +19,7 @@ is what this module pins down and tests.
 Collision note: dedup on xxhash64(url) admits 64-bit collisions
 (~3·10^-4 expected false-dups at 10^10 URLs). The batch path backs the
 bloom with an exact anti-join; here the hash IS the key, which matches the
-bloom/cuckoo tier of the north rule. An exact variant would keep the URL
+bloom tier of the north rule. An exact variant would keep the URL
 bytes in state per shard.
 """
 

@@ -1,27 +1,12 @@
-"""Table IO shim: parquet-directory checkpoints or Iceberg tables.
+"""Checkpoint table IO: one parquet directory per table under a workdir.
 
-The crawl loop's per-round state (enqueue/gate/fetched logs +
-a manifest) goes through this interface (SURVEY §7 step 1; the north rule
-names Iceberg as the production table format):
-
-- :class:`ParquetTableIO` — the sandbox/default backend: one parquet
-  directory per table under a workdir, atomic publish via write-to-temp +
-  rename, manifest as a JSON file. Exactly the semantics the engine has
-  always used; all crawl/resume tests run through it.
-- :class:`IcebergTableIO` — the cluster backend, active when an Iceberg
-  catalog is configured on the session AND the runtime jar is present
-  (:func:`iceberg_available`). Tables live under a namespace; publishes
-  are Iceberg atomic snapshot commits (createOrReplace), so the
-  torn-round story is handled by the format: an interrupted write never
-  becomes a snapshot, and resume-time cleanup is DROP of the stale
-  tables. Snapshot history additionally allows rolling a table back
-  (``rollback_to_before``) without rewriting files — the Iceberg upgrade
-  of the manifest-scan resume. This branch follows the public
-  Iceberg-Spark API; the sandbox ships no iceberg-spark runtime jar, so
-  it is exercised only by a skip-marked test and gated at runtime.
-
-Both backends share the retry + observed-metrics write contract of
-``plans/crawl._write``.
+The crawl loop's per-round state (enqueue/gate/fetched logs + a manifest)
+goes through :class:`ParquetTableIO`: every table publishes atomically by
+write-to-temp + rename, an in-place rewrite (compaction) by a staged copy
+and two renames that ``recover_replaces`` heals after a crash, and the
+manifest — the round's commit point — by a temp file, ``fsync`` and
+``os.replace``. Writes share the retry + observed-metrics contract of
+``_run_write``.
 """
 
 from __future__ import annotations
@@ -39,8 +24,8 @@ from go_crawler_spark.operators.retrying import retry_call
 
 
 def _run_write(df: DataFrame, publish, retry_cfg, observe, obs_out) -> None:
-    """Shared write protocol: optional observed metrics + retry around an
-    atomic publish callable."""
+    """Write protocol: optional observed metrics + retry around an atomic
+    publish callable."""
 
     def action() -> None:
         out_df = df
@@ -234,130 +219,12 @@ class ParquetTableIO:
             return json.load(f)
 
     def put_manifest(self, manifest: dict) -> None:
-        with open(os.path.join(self.workdir, "MANIFEST.json"), "w") as f:
+        """Publish the manifest atomically: a crash mid-write leaves the
+        previous manifest in place, never a truncated one."""
+        path = os.path.join(self.workdir, "MANIFEST.json")
+        tmp = path + "._tmp"
+        with open(tmp, "w") as f:
             json.dump(manifest, f)
-
-
-def iceberg_available(spark: SparkSession, catalog: str) -> bool:
-    """True iff ``catalog`` is configured as an Iceberg SparkCatalog and
-    the runtime classes are loadable in this JVM."""
-    try:
-        impl = spark.conf.get(f"spark.sql.catalog.{catalog}")
-    except Exception:
-        return False
-    if not impl:
-        return False
-    try:
-        spark._jvm.java.lang.Class.forName(impl)  # noqa: SLF001
-        return True
-    except Exception:
-        return False
-
-
-class IcebergTableIO:
-    """Iceberg-catalog backend (``<catalog>.<namespace>.<name>`` per
-    table). Publishes are atomic snapshot commits; an interrupted write
-    leaves no snapshot, so resume needs no torn-write scan."""
-
-    def __init__(self, spark: SparkSession, catalog: str, namespace: str):
-        if not iceberg_available(spark, catalog):
-            raise RuntimeError(
-                f"catalog '{catalog}' is not a loadable Iceberg catalog; "
-                "configure spark.sql.catalog.<name> with the iceberg-spark "
-                "runtime jar on the classpath"
-            )
-        self.spark = spark
-        self.catalog = catalog
-        self.namespace = namespace
-        spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{namespace}")
-
-    def _ident(self, name: str) -> str:
-        return f"{self.catalog}.{self.namespace}.{name}"
-
-    def write(
-        self,
-        df: DataFrame,
-        name: str,
-        retry_cfg: Optional[RetryConfig] = None,
-        observe: Optional[list] = None,
-        obs_out: Optional[dict] = None,
-    ) -> DataFrame:
-        def publish(out_df: DataFrame) -> None:
-            out_df.writeTo(self._ident(name)).createOrReplace()
-
-        _run_write(df, publish, retry_cfg, observe, obs_out)
-        return self.read(name)
-
-    def replace(
-        self,
-        df: DataFrame,
-        name: str,
-        retry_cfg: Optional[RetryConfig] = None,
-    ) -> DataFrame:
-        """In-place replace: an Iceberg ``createOrReplace`` is an atomic
-        snapshot commit and the self-referencing read resolves against the
-        pre-commit snapshot (data files survive until snapshot expiry), so
-        the plain write path IS already crash-safe here."""
-        return self.write(df, name, retry_cfg)
-
-    def recover_replaces(self) -> None:
-        pass
-
-    def read(self, *names: str) -> DataFrame:
-        out = None
-        for n in names:
-            t = self.spark.table(self._ident(n))
-            out = t if out is None else out.unionByName(t)
-        return out
-
-    def exists(self, name: str) -> bool:
-        return self.spark.catalog.tableExists(self._ident(name))
-
-    def list_names(self, prefix: str = "") -> list[str]:
-        rows = self.spark.sql(
-            f"SHOW TABLES IN {self.catalog}.{self.namespace}"
-        ).collect()
-        return sorted(
-            r["tableName"] for r in rows if r["tableName"].startswith(prefix)
-        )
-
-    def delete(self, name: str) -> None:
-        self.spark.sql(f"DROP TABLE IF EXISTS {self._ident(name)}")
-
-    # Iceberg commits are atomic — there is no torn staging copy
-    delete_stale = delete
-
-    def cleanup_staging(self) -> None:
-        pass
-
-    def rollback_to_before(self, name: str, timestamp_ms: int) -> None:
-        """Snapshot-based rollback (the Iceberg upgrade of manifest-scan
-        resume): restore ``name`` to its last snapshot before
-        ``timestamp_ms`` without rewriting data files."""
-        self.spark.sql(
-            f"CALL {self.catalog}.system.rollback_to_timestamp("
-            f"'{self.namespace}.{name}', TIMESTAMP '{timestamp_ms}')"
-        )
-
-    def get_manifest(self) -> Optional[dict]:
-        if not self.exists("manifest"):
-            return None
-        rows = self.read("manifest").collect()
-        return json.loads(rows[0]["payload"]) if rows else None
-
-    def put_manifest(self, manifest: dict) -> None:
-        df = self.spark.createDataFrame(
-            [(json.dumps(manifest),)], "payload string"
-        )
-        df.writeTo(self._ident("manifest")).createOrReplace()
-
-
-def make_tableio(spark: SparkSession, workdir: str, backend: str = "parquet",
-                 catalog: str = "crawl", namespace: str = "state"):
-    """Backend factory: explicit ``backend`` wins; 'auto' picks Iceberg
-    when a loadable catalog is configured, else parquet."""
-    if backend == "iceberg":
-        return IcebergTableIO(spark, catalog, namespace)
-    if backend == "auto" and iceberg_available(spark, catalog):
-        return IcebergTableIO(spark, catalog, namespace)
-    return ParquetTableIO(spark, workdir)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)

@@ -49,14 +49,12 @@ def parse_args(argv=None) -> argparse.Namespace:
     p.add_argument("--host-slots", type=int, default=None,
                    help="politeness: max fetches per host per round (0=off)")
     p.add_argument("--seen-filter-min-rows", type=int, default=None,
-                   help="seen-log rows below which the bloom/cuckoo "
+                   help="seen-log rows below which the bloom "
                         "prefilter stays dormant (exact anti-join "
                         "broadcasts anyway); 0 = always on")
-    p.add_argument("--seen-filter", choices=("bloom", "cuckoo", "none"),
-                   default=None)
-    p.add_argument("--table-backend", choices=("parquet", "iceberg", "auto"),
-                   default=None, help="per-round state tables: parquet dirs "
-                   "(default) or an Iceberg catalog (tableio.py)")
+    p.add_argument("--seen-filter", choices=("bloom", "none"), default=None,
+                   help="bloom-prune the seen anti-join (default) or run "
+                        "the exact anti-join alone")
     p.add_argument("--trap-templates", help="parquet of spider-trap "
                    "templates (a url_trap_census output or a bare "
                    "template column); matching frontier URLs are blocked "
@@ -90,7 +88,8 @@ def parse_args(argv=None) -> argparse.Namespace:
                    "floor(round_seconds/delay) politeness slots per round")
     p.add_argument("--output", default="./crawl_out",
                    help="output dir (CRAWLER_OUTPUT_DIR)")
-    p.add_argument("--resume", help="workdir of an interrupted crawl")
+    p.add_argument("--resume", help="workdir of an interrupted crawl "
+                   "(its parquet checkpoint tables and MANIFEST.json)")
     p.add_argument("--compact", help="workdir whose per-round enqueue "
                    "deltas to merge into one bucketed seen table "
                    "(checkpoint maintenance; exits after compacting)")
@@ -115,14 +114,11 @@ def main(argv=None) -> None:
     if args.host_slots is not None:
         overrides["host_slots_per_round"] = args.host_slots
     if args.seen_filter is not None:
-        overrides["seen_filter"] = args.seen_filter
-        overrides["use_bloom"] = args.seen_filter != "none"
+        overrides["use_bloom"] = args.seen_filter == "bloom"
     if args.seen_filter_min_rows is not None:
         overrides["bloom_min_seen_rows"] = args.seen_filter_min_rows
     if args.shuffle_partitions is not None:
         overrides["shuffle_partitions"] = args.shuffle_partitions
-    if args.table_backend is not None:
-        overrides["table_backend"] = args.table_backend
     if args.normalize_urls:
         overrides["normalize_urls"] = True
     overrides["output_dir"] = args.output

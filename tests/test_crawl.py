@@ -83,7 +83,7 @@ def _sim_tables(corpus, cfg, robots_rules=None, seeds=None):
 
 
 def _assert_match(spark, pages_df, corpus, cfg, robots=None, seeds=None):
-    e_sched, e_fetched, e_seen, e_metrics, _ = _engine_tables(
+    e_sched, e_fetched, e_seen, e_metrics, res = _engine_tables(
         spark, pages_df, cfg, robots, seeds
     )
     s_sched, s_fetched, s_seen, s_metrics = _sim_tables(corpus, cfg, robots, seeds)
@@ -91,6 +91,7 @@ def _assert_match(spark, pages_df, corpus, cfg, robots=None, seeds=None):
     assert e_fetched == s_fetched
     assert e_seen == s_seen
     assert e_metrics == s_metrics
+    return res
 
 
 def test_basic_bfs(spark, pages_df, corpus):
@@ -283,15 +284,15 @@ def test_large_enqueue_tight_budget(spark, pages_df, corpus, monkeypatch):
 
 
 def test_all_features_combined(spark, pages_df, corpus):
-    """Politeness + robots + depth limit + tight budget + cuckoo seen
-    filter, all at once — the full north-rule configuration against the
-    simulator."""
+    """Politeness + robots + depth limit + tight budget + an active bloom
+    seen filter, all at once — the full north-rule configuration against
+    the simulator."""
     cfg = CrawlConfig(
         max_count=25,
         max_depth=2,
         host_slots_per_round=2,
-        seen_filter="cuckoo",
-        cuckoo_buckets=1 << 12,
+        bloom_min_seen_rows=0,
     )
     rules = [("big.example.com", "/p8"), ("alpha.example.org", "/p4.html")]
-    _assert_match(spark, pages_df, corpus, cfg, robots=rules)
+    res = _assert_match(spark, pages_df, corpus, cfg, robots=rules)
+    assert res.seen_filter and all(e["active"] for e in res.seen_filter)

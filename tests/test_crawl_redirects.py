@@ -93,9 +93,9 @@ def test_loop_and_long_chain_blocked(result, spark):
 def test_blocked_log_status(result, spark):
     """Gate-skipped rows land in the round's fetched_<r> checkpoint with
     their skip status, size 0 and no content."""
-    from go_crawler_spark.tableio import make_tableio
+    from go_crawler_spark.tableio import ParquetTableIO
 
-    io = make_tableio(spark, result.workdir)
+    io = ParquetTableIO(spark, result.workdir)
     names = io.list_names("fetched_")
     assert names
     log = io.read(*names).filter(F.col("status").startswith("skipped_r"))

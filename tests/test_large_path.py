@@ -1,4 +1,4 @@
-"""The large-round code paths (distributed ordered-limit budget +
+"""The large-round code paths (bucketed budget + seq scheduler,
 range-partitioned two-pass seq assignment) are never triggered at test
 scale by the SMALL_INPUT_ROWS heuristic — force them and require identical
 results to the simulator / small path."""
@@ -57,14 +57,20 @@ def test_seq_small_path(spark):
 
 
 def test_assign_seq_admit_budget_edges(spark):
-    from go_crawler_spark.operators.sequence import assign_seq_admit_budget
+    from go_crawler_spark.operators.sequence import (
+        assign_seq_admit_budget_bucketed,
+        release_pending_caches,
+    )
 
     # interleaved pages/assets in a scrambled input order; canonical order = key
     rows = [(f"u{k}", "page" if k % 3 != 0 else "asset", k) for k in range(200)]
     df = spark.createDataFrame(rows, "url string, kind string, key int").repartition(7)
+    # order-aligned: every key of bucket b precedes every key of bucket b+1
+    bucket = F.floor(F.col("key") / 40)
 
-    out = assign_seq_admit_budget(df, ["key"], page_budget=50, seq_start=10,
-                                  num_partitions=5).collect()
+    out = assign_seq_admit_budget_bucketed(
+        df, ["key"], bucket, page_budget=50, seq_start=10, num_partitions=5
+    ).collect()
     by_key = {r["key"]: r for r in out}
     budget = 50
     seq = 10
@@ -79,8 +85,10 @@ def test_assign_seq_admit_budget_edges(spark):
                 budget -= 1
 
     # budget 0: every page refused, every asset admitted with contiguous seq
-    out0 = assign_seq_admit_budget(df, ["key"], page_budget=0, seq_start=0,
-                                   num_partitions=3).collect()
+    out0 = assign_seq_admit_budget_bucketed(
+        df, ["key"], bucket, page_budget=0, seq_start=0, num_partitions=3
+    ).collect()
+    release_pending_caches()
     assets = sorted((r["key"], r["seq"]) for r in out0 if r["kind"] == "asset")
     assert [s for _, s in assets] == list(range(len(assets)))
     assert all(r["seq"] is None and not r["admitted"] for r in out0 if r["kind"] == "page")

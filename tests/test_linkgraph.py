@@ -66,6 +66,24 @@ def test_trustrank_hand_computed_and_spam_zero(spark):
     assert got[2] == 0.0 and got[3] == 0.0  # no trust path -> exactly zero
 
 
+def test_trustrank_ignores_seeds_outside_nodes(spark):
+    """A seed missing from ``nodes`` gets no teleport mass, so it must not
+    count in |S| either: every rank is unchanged and trust still sums
+    to 1 on a graph without dangling nodes."""
+    from go_crawler_spark.operators.linkgraph import trustrank
+
+    nodes = spark.createDataFrame([(0,), (1,), (2,)], "node long")
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "src long, dst long")
+
+    def ranks(seed_ids):
+        seeds = spark.createDataFrame([(s,) for s in seed_ids], "node long")
+        return {r["node"]: r["rank"] for r in trustrank(nodes, edges, seeds).collect()}
+
+    base = ranks([0])
+    assert ranks([0, 99]) == base
+    assert abs(sum(base.values()) - 1.0) < 1e-12
+
+
 def test_trustrank_empty_seeds_all_zero(spark):
     from go_crawler_spark.operators.linkgraph import trustrank
 

@@ -13,7 +13,6 @@ from hypothesis import given, settings, strategies as st
 
 from go_crawler_spark.functions.htmlx import parse_page, resolve_links_and_assets, rewrite_html
 from go_crawler_spark.functions.urls import canonicalize, go_path_base, host_of
-from go_crawler_spark.operators.cuckoo import CuckooFilter
 
 # --- URL canonicalization ---------------------------------------------------
 
@@ -91,9 +90,9 @@ def test_parse_page_always_equals_two_pass(bits):
     seq_start=st.integers(min_value=0, max_value=1000),
 )
 def test_budget_seq_vectorized_matches_sequential(kinds, budget, seq_start):
-    """The numpy cumsum verdict used in assign_seq_admit_budget* must equal
-    the reference's sequential Push loop (queue.go:88-114) for any kind
-    sequence and budget."""
+    """The numpy cumsum verdict used in assign_seq_admit_budget_bucketed
+    must equal the reference's sequential Push loop (queue.go:88-114) for
+    any kind sequence and budget."""
     # sequential model
     exp_admit, exp_seq = [], []
     b, s = budget, seq_start
@@ -115,20 +114,3 @@ def test_budget_seq_vectorized_matches_sequential(kinds, budget, seq_start):
     got_seq = [int(q) if a else None for a, q in zip(admitted, seqs)]
     assert list(admitted) == exp_admit
     assert got_seq == exp_seq
-
-
-# --- cuckoo filter ----------------------------------------------------------
-
-
-@settings(max_examples=50, deadline=None)
-@given(
-    hashes=st.lists(
-        st.integers(min_value=0, max_value=2**64 - 1), min_size=0, max_size=300
-    )
-)
-def test_cuckoo_no_false_negatives_ever(hashes):
-    f = CuckooFilter(1 << 10)
-    h = np.array(hashes, dtype=np.uint64)
-    f.add_many(h)
-    if len(h):
-        assert f.might_contain(h).all()

@@ -67,7 +67,7 @@ def test_compact_then_resume_equals_uninterrupted(spark, pages_df):
     row-identical: resume after compaction reproduces the uninterrupted
     crawl, including from a torn (crashed mid-round) checkpoint."""
     from go_crawler_spark.plans.crawl import compact_enqueue_log
-    from go_crawler_spark.tableio import make_tableio
+    from go_crawler_spark.tableio import ParquetTableIO
 
     cfg = CrawlConfig(max_count=40, host_slots_per_round=3)
     full = run_crawl(spark, pages_df, default_seeds(), cfg)
@@ -80,7 +80,7 @@ def test_compact_then_resume_equals_uninterrupted(spark, pages_df):
 
     merged_away = compact_enqueue_log(spark, wd, cfg)
     assert merged_away >= 1
-    io = make_tableio(spark, wd, cfg.table_backend)
+    io = ParquetTableIO(spark, wd)
     assert io.list_names("enqueue_") == ["enqueue_0"]
     assert "fetched_2" not in io.list_names("fetched_")
 
@@ -141,13 +141,13 @@ def test_gated_checkpoint_layout(spark, pages_df, gated):
     """One gate table at rest (the last round's: the next frontier reads
     it), no frontier table and no separate blocked log; the manifest
     carries the seen-row count and the frontier size."""
-    from go_crawler_spark.tableio import make_tableio
+    from go_crawler_spark.tableio import ParquetTableIO
 
     cfg, kw, _ = gated
     wd = tempfile.mkdtemp(prefix="gate_layout_")
     run_crawl(spark, pages_df, default_seeds(), cfg, workdir=wd,
               max_rounds=3, **kw)
-    io = make_tableio(spark, wd, cfg.table_backend)
+    io = ParquetTableIO(spark, wd)
     names = io.list_names()
     assert io.list_names("gate_") == ["gate_2"]
     assert "frontier" not in names and not io.list_names("blocked_")

@@ -390,3 +390,26 @@ def test_adaptive_host_delay_clamps_and_exact_mean(spark):
         "fast.org": (4, 250),
         "mid.org": (2, 1200),
     }
+
+
+def test_adaptive_host_delay_null_only_host_backs_off_fully(spark):
+    """A host with only NULL observations has no evidence of its speed:
+    n_obs 0 and the full max delay, with no divide-by-zero under ANSI."""
+    from go_crawler_spark.operators.politeness import adaptive_host_delay
+
+    df = spark.createDataFrame(
+        [("dark.org", None), ("dark.org", None), ("mid.org", 800)],
+        "host string, response_ms long",
+    )
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        got = {
+            r["host"]: (r["n_obs"], r["delay_ms"])
+            for r in adaptive_host_delay(
+                df, min_delay_ms=250, max_delay_ms=30_000
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert got == {"dark.org": (0, 30_000), "mid.org": (1, 1200)}

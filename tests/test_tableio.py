@@ -1,5 +1,5 @@
-"""Table-io shim: parquet backend semantics (the path every crawl/resume
-test exercises implicitly) plus the Iceberg gating contract."""
+"""Checkpoint table IO: parquet table semantics (the path every
+crawl/resume test exercises implicitly) and the atomic manifest."""
 
 from __future__ import annotations
 
@@ -9,12 +9,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from go_crawler_spark.tableio import (
-    IcebergTableIO,
-    ParquetTableIO,
-    iceberg_available,
-    make_tableio,
-)
+from go_crawler_spark.tableio import ParquetTableIO
 from tests.conftest import spark_jobs
 
 
@@ -171,26 +166,19 @@ def test_manifest_roundtrip(spark, io):
     assert io.get_manifest() == {"round": 3, "seq_next": 17}
 
 
-def test_iceberg_gating(spark):
-    """No Iceberg catalog configured in the sandbox: availability is
-    False, the explicit backend raises, and 'auto' falls back to
-    parquet."""
-    assert not iceberg_available(spark, "crawl")
-    with pytest.raises(RuntimeError, match="[Ii]ceberg"):
-        IcebergTableIO(spark, "crawl", "state")
-    tio = make_tableio(spark, tempfile.mkdtemp(prefix="tio_"), "auto")
-    assert isinstance(tio, ParquetTableIO)
+def test_manifest_write_is_atomic(spark, io, monkeypatch):
+    """A crash while the manifest is being written leaves the previous
+    manifest readable, not a truncated file."""
+    import json
 
+    io.put_manifest({"round": 3, "seq_next": 17})
 
-def test_iceberg_backend_roundtrip(spark):
-    """Exercised only when an Iceberg catalog + runtime jar are present
-    (not in this sandbox)."""
-    if not iceberg_available(spark, "crawl"):
-        pytest.skip("no Iceberg catalog/jar in this environment")
-    tio = IcebergTableIO(spark, "crawl", "state_test")
-    tio.write(spark.range(10), "t")
-    assert tio.read("t").count() == 10
-    tio.put_manifest({"round": 1})
-    assert tio.get_manifest() == {"round": 1}
-    tio.delete("t")
-    assert not tio.exists("t")
+    def torn_dump(obj, f, **kw):
+        f.write(json.dumps(obj)[:10])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError):
+        io.put_manifest({"round": 4, "seq_next": 29})
+    monkeypatch.undo()
+    assert io.get_manifest() == {"round": 3, "seq_next": 17}

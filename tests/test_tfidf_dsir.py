@@ -198,6 +198,7 @@ def test_host_budget_releases_its_cache(spark):
     materialized (per-round calls previously leaked one cached frame and
     one checkpoint each) — including the total_w==0 early return."""
     from go_crawler_spark.operators.sequence import (
+        _PENDING_CHECKPOINTS,
         release_pending_caches,
         release_pending_checkpoints,
     )
@@ -207,6 +208,7 @@ def test_host_budget_releases_its_cache(spark):
     baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
     _alloc(spark, [("a", 5), ("b", 3), ("c", 1)], 10)
     _alloc(spark, [("a", 0), ("b", 0)], 5)  # early-return path
+    assert _PENDING_CHECKPOINTS  # the top-r pass checkpointed
     assert spark.sparkContext._jsc.getPersistentRDDs().size() > baseline
     release_pending_caches()
     release_pending_checkpoints()
