@@ -2937,7 +2937,12 @@ def oracle_sql() -> dict[str, str]:
               FROM documents)
             SELECT surt_key, ts14,
                    surt_key || ' ' || ts14 || ' {"url": "'
-                     || replace(replace(url, '\\', '\\\\'), '"', '\\"')
+                     || array_to_string(list_transform(
+                          string_split(replace(replace(url, '\\', '\\\\'),
+                                               '"', '\\"'), ''),
+                          c -> CASE WHEN c <> '' AND ord(c) < 32
+                                    THEN '\\u' || lpad(lower(hex(ord(c))), 4, '0')
+                                    ELSE c END), '')
                      || '", "digest": "' || digest
                      || '", "length": ' || CAST(len_b AS VARCHAR) || '}'
                      AS cdxj

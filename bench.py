@@ -7,9 +7,9 @@ line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
 ``--scaling``: run the same frontier-round job on identical input at
 local[1] (N), local[4] (4N), and local[32], fresh process per level+rep
-(see scaling_report docstring and BASELINE.md "Target protocol"), and
-report throughput at each plus scaling efficiency E = (T_N / T_4N) / 4
-into BENCH/BASELINE.md.
+(see the scaling_report docstring), and print throughput at each plus
+scaling efficiency E = (T_N / T_4N) / 4 as markdown tables, then one JSON
+line; BENCH/BASELINE.md holds the protocol and the recorded runs.
 """
 
 from __future__ import annotations
@@ -226,7 +226,7 @@ def frontier_round_bench(
     full round pipeline — distributed seed scheduling (dedup + budget +
     seq), broadcast fetch-join, vectorized link extraction over every page,
     ~18-children-per-page explode/canonicalize, within-round first-writer dedup,
-    bloom-pruned anti-join vs seen, fused budget+seq enqueue, checkpoint
+    exact anti-join vs seen, fused budget+seq enqueue, checkpoint
     writes, and the rewrite/save sink.
 
     Why single-round: at the 10^10-URL scale the north rule targets, one
@@ -511,7 +511,7 @@ def scaling_report(sf_dir: str) -> None:
       step that avoids thread oversubscription on 32 vCPUs.
     - local[32] is reported for peak; its gap to ideal reflects 2×
       oversubscription (task threads + python workers) and JVM placement
-      variance (see the report's JVM-sizing section), not an engine
+      variance (see BENCH/BASELINE.md, JVM sizing), not an engine
       property.
     """
     import subprocess
@@ -567,244 +567,30 @@ def scaling_report(sf_dir: str) -> None:
     # executor adds a memory bus, so only the CPU ceiling applies there).
     ceiling = min(measure_cpu_ceiling(2, 8), 1.0)
     membw = min(measure_membw_ceiling(2, 8), 1.0)
-    f1, f4, f32 = results[1], results[4], results[32]
-    e_clean = (f1["sec"] / f4["sec"]) / 4
+    e_clean = (results[1]["sec"] / results[4]["sec"]) / 4
     e_norm = min(e_clean / ceiling, 1.0) if ceiling > 0 else float("nan")
 
-    lines = [
-        "# BENCH — measured results",
-        "",
-        "Synthetic Common-Crawl-style corpus (input_hint schema), seed=42,",
-        f"{SCALING_PAGES} pages (+1 unique asset each, ~11 KB html/page),",
-        "generated once to tmpfs parquet; every level reads identical",
-        "bytes. One fresh process per level+rep (no JVM/JIT warmth leaking",
-        "between levels). The graded N→4N pair runs INTERLEAVED ([1,4]×3,",
-        "best per level): per-JVM-launch placement luck dominates this",
-        "VM's ±30% spread, and consecutive same-level reps let one bad",
-        "machine phase land entirely on one level — interleaving makes",
-        "luck hit both levels alike (same protocol as the headline A/B).",
-        f"All rep times: local[1] {reps_log[1]}, local[4] {reps_log[4]},",
-        f"local[32] {reps_log[32]}. Workdir on",
-        "tmpfs: on a cluster the per-round checkpoint goes to a",
-        "distributed store whose bandwidth scales with executors; a single",
-        "local disk would be a sandbox-only bottleneck.",
-        "",
-        "## Frontier-round throughput (north-rule metric)",
-        "",
-        "One frontier batch of every page URL through the full round",
-        "pipeline: distributed seed scheduling (dedup + budget + contiguous",
-        "seq), broadcast fetch-join, ONE fused vectorized parse per page",
-        "(link extraction + URL rewrite in a single Arrow pass),",
-        "~18-children-per-page canonicalize/explode, within-round first-writer dedup",
-        "(map-side min_by), bloom-pruned anti-join vs seen, fused",
-        "budget+seq enqueue, per-round checkpoint writes; the pages sink is",
-        "a column-pruned view of the checkpoint (no second copy).",
-        "Single-round: at the 10^10-URL scale the north rule targets, one",
-        "BFS round holds billions of URLs and per-round driver coordination",
-        "(~seconds) is noise; a many-round crawl over a sandbox-sized",
-        "corpus measures that coordination instead of the engine.",
+    # the measured tables only; the protocol and its history are prose in
+    # BENCH/BASELINE.md, which these tables are pasted into
+    levels = ((1, "N"), (4, "4N"), (32, "32N"))
+    print("\n".join([
+        "All rep times (s): " + ", ".join(f"local[{c}] {reps_log[c]}" for c, _ in levels),
         "",
         "| level | sec | urls_scheduled/s | pages_fetched/s |",
         "|---|---|---|---|",
-        f"| local[1] (N) | {f1['sec']:.1f} | {f1['urls_scheduled_per_sec']:.0f} | {f1['pages_fetched_per_sec']:.0f} |",
-        f"| local[4] (4N) | {f4['sec']:.1f} | {f4['urls_scheduled_per_sec']:.0f} | {f4['pages_fetched_per_sec']:.0f} |",
-        f"| local[32] (32N) | {f32['sec']:.1f} | {f32['urls_scheduled_per_sec']:.0f} | {f32['pages_fetched_per_sec']:.0f} |",
+        *(f"| local[{c}] ({n}) | {results[c]['sec']:.1f} "
+          f"| {results[c]['urls_scheduled_per_sec']:.0f} "
+          f"| {results[c]['pages_fetched_per_sec']:.0f} |" for c, n in levels),
         "",
-        f"**Scaling efficiency, N→4N (local[1]→local[4]): E = (T_N / T_4N) / 4 = {e_clean:.3f}**",
-        "",
-        "Why local[1]→local[4] is the N→4N pair: each busy Spark core in",
-        "this job runs ~2 threads (JVM task + Python/Arrow worker), so",
-        "local[4] already keeps ~8-10 hardware threads busy — the largest",
-        "4× step that stays clear of thread oversubscription on 32 vCPUs",
-        "(local[32] runs ~64 runnables). It isolates engine scaling the",
-        "way a real N→4N executor-count change (each executor with its own",
-        "cores and memory bus) would.",
-        "",
-        f"Same-box hardware ceilings for the same thread step (2→8 busy",
-        "workers, measured each run, clamped to ≤1.0): pure-CPU",
-        f"{ceiling:.3f}; pure memory-stream {membw:.3f} (the shared memory",
-        "bus saturates near 2 streaming workers on this VM). Engine",
-        f"efficiency normalized to the CPU ceiling = {e_norm:.3f}.",
-        "",
-        "Why two ceilings: one frontier round moves ~2 GB of scanned",
-        "corpus plus ~10 GB of checkpoint writes through tmpfs (RAM), so a",
-        "material share of its wall time is BANDWIDTH-bound, and on a",
-        "single box that share cannot scale with thread count at all",
-        "(ceiling above). The engine's raw E sits far above the streaming",
-        "ceiling because the CPU-bound vectorized parse dominates — i.e.",
-        "the sub-ideal raw figure is the shared memory bus, not engine",
-        "serialization. On a real N→4N executor-count change (the metric",
-        "the north rule describes) every added executor brings its own",
-        "memory bus and distributed-store bandwidth, so the bandwidth",
-        "share scales WITH N there; the single-box sweep structurally",
-        "under-counts executor scaling for the bytes-moving share.",
-        "",
-        "Session variance, measured (every run of the identical protocol,",
-        "with the box's own pure-CPU ceiling for the same thread step",
-        "probed in the same window):",
-        "",
-        "| session | raw E(1→4) | box pure-CPU ceiling | note |",
-        "|---|---|---|---|",
-        "| round 2 | 0.953 | ~1.0 | box cooperated — raw ≥ 0.8 banked |",
-        "| round 3 (a) | 0.68 | — | consecutive-rep protocol (superseded) |",
-        "| round 3 (b) | 0.67 | — | consecutive-rep protocol (superseded) |",
-        "| round 3 zstd | 0.796 | 0.71 | engine out-scaled box arithmetic |",
-        "| round 4 (a) | 0.721 | 0.703 | engine out-scaled box arithmetic |",
-        "| round 4 (b) | 0.754 | 0.976 | membw ceiling 0.05 — bus-bound window; fetch_extract phase alone scaled 0.836 |",
-        "| round 5 (a) | 0.775 | 0.493 | membw ceiling 0.184 — engine out-scaled box arithmetic 1.57× |",
-        "| round 5 (b) | 0.842 | 1.000 | membw ceiling 0.116 — **raw ≥ 0.8 BANKED** (north-rule criterion met with the memory bus at 12%) |",
-        f"| round 5 (this run) | {e_clean:.3f} | {ceiling:.3f} "
-        f"| membw ceiling {membw:.3f}"
-        + (f" — engine out-scaled box arithmetic {e_clean / ceiling:.2f}×"
-           if ceiling > 0 and e_clean > ceiling else "")
-        + " |",
-        "",
-        "All-time peak throughput across sessions: 15.8k URLs",
-        "scheduled/s at local[32] (round 4; absolute throughput tracks",
-        "the box phase — the session table above is the graded metric).",
-        "",
-        "(A further round-4 run read 0.799 with ceiling 1.0 but is",
-        "EXCLUDED: concurrent test jobs overlapped its graded reps —",
-        "contaminated, per the protocol's exclusivity rule.) The round-4",
-        "pair brackets the diagnosis: in (a) the engine out-scaled the",
-        "box's plain arithmetic; in (b) the CPU phase was healthy but the",
-        "memory-stream probe collapsed to 0.05 — and the loss landed",
-        "exactly where bytes move (local[4] seeds/enqueue barely gained",
-        "over local[1]) while the CPU-bound fetch_extract phase scaled at",
-        "0.836 raw on its own. The shortfall tracks the box's shared bus,",
-        "not engine serialization; raw exceeded 0.8 (0.953) when the box",
-        "cooperated. A 5-pair INTERLEAVED cross-code A/B (round-2",
-        "code vs round-3 code, same corpus, same level) shows medians",
-        "148 s vs 156 s with overlapping ranges and reversed pairs —",
-        "the code is not the driver; the box's day-to-day phase (JVM",
-        "placement + bus contention) is. All rep times are listed above",
-        "so any session's numbers can be re-based.",
-        "",
-        "local[32] is reported for peak throughput; its gap to ideal",
-        "reflects 2× thread oversubscription (32 JVM task threads + 32",
-        "python workers on 32 vCPUs) plus residual JVM placement variance",
-        "(see the JVM-sizing section below), not an engine property — the",
-        "per-stage evidence is in the phases breakdown (python-UDF parse",
-        "stages scale with cores; driver-coordination phases are constant).",
-        "",
-        "## JVM sizing (round-2 finding; supersedes earlier 'host",
-        "throttling' reading)",
-        "",
-        "Mid-round-2 the frontier round showed 2.5× run-to-run variance",
-        "(38-180s, same level/corpus/code). Probes ruled out the host:",
-        "a 90s sustained 32-process pure-CPU burn held 305-357 Mops/s;",
-        "parse-like string/regex work scaled 6.8× from 4→32 processes;",
-        "steal ~2%; no PSI pressure; no memory fragmentation. Event-log +",
-        "per-thread /proc sampling showed the parse stage's summed JVM CPU",
-        "inflating ~3× in slow runs with neither JVM task threads nor",
-        "python workers saturated. Root cause: an oversized 48g driver",
-        "heap (2×2 interleaved reps at local[16]: 74-89s parse with 48g vs",
-        "24-30s with 12g — TLB/cache pressure from a sprawling live set,",
-        "bimodal across JVM launches from page-placement luck). bench.py",
-        "now sizes the heap to the round's working set (heap_gb_for_round:",
-        "12g at 120k pages … 23g at 600k — 16g OOM'd at 600k×local[32],",
-        "while page bytes never land on the heap by design) and uses",
-        "ParallelGC (across 6 local[32] reps, G1 fell into a 95-103s slow",
-        "mode 3 times; ParallelGC stayed in 51-69s). Cluster reading: size",
-        "executor heaps to their working set, not the machine.",
-        "",
-        "## Headline protocol A/B (round-3 reconciliation)",
-        "",
-        "Round 2's last commit switched the 120k-page headline frontier",
-        "round from an on-heap corpus .cache() to a tmpfs-parquet re-scan,",
-        "claiming 2-4x faster; the driver then measured the headline 1.8x",
-        "SLOWER. Settled by an interleaved A/B at the headline's exact",
-        "configuration (local[32], 120k pages, heap_gb_for_round=12g,",
-        "fresh process per rep, 3 INTERLEAVED reps per arm so",
-        "JVM-placement luck cannot land on one arm):",
-        "",
-        "| arm | secs (3 reps) | median | median fetch_extract |",
-        "|---|---|---|---|",
-        "| tmpfs scan | 61.1 / 42.9 / 32.4 | 42.9 | 29.0 |",
-        "| on-heap cache | 33.9 / 31.0 / 31.0 | 31.0 | 10.5 |",
-        "",
-        "At 120k pages the cache fits a working-set heap and wins (and is",
-        "far stabler); the round-2 commit extrapolated from 300k-page/",
-        "local[16] probes where it no longer fits — at THAT scale scan",
-        "wins, so the 600k-page scaling protocol keeps scanning. bench.py's",
-        "headline uses cache_corpus=True; part of the round-2 regression",
-        "was also bench_once running at the 16g env-default heap instead",
-        "of the working-set 12g (fixed: heap_gb_for_round in bench_once).",
-        "",
-        "## Flagship cross-commit A/B (round 4)",
-        "",
-        "Mid-round-4, a headline rerun in a degraded box phase (same",
-        "session's pure-CPU ceiling probe read 0.739 for the 8→32-process",
-        "step) showed crawl_flagship at 50.4 s vs the driver's round-3",
-        "24.5 s, with the round-4 crawl-loop changes (per-fetch md5",
-        "fingerprint column, trap-gate plumbing, seen-filter Observation,",
-        "end-of-round localCheckpoint release) as suspects. Settled by a",
-        "cross-commit interleaved A/B in a later quiet phase: crawl_bench",
-        "(sf0.1, local[32], 12g heap, fresh subprocess per rep, arms",
-        "interleaved so placement luck hits both alike), HEAD vs the",
-        "round-3 verdict commit dea7332:",
-        "",
-        "| arm | secs (3 reps) | median |",
-        "|---|---|---|",
-        "| HEAD (round-4 changes) | 30.3 / 31.2 / 25.3 | 30.3 |",
-        "| dea7332 (pre-session) | 30.9 / 39.5 / 27.2 | 30.9 |",
-        "",
-        "Identical rounds (6) and fetched counts (89,812) on both arms —",
-        "the round-4 additions are behavior-neutral for a trap-free crawl",
-        "and cost nothing measurable (the md5 fingerprint rides the",
-        "existing fetched write; the Observation is a plan-side",
-        "CollectMetrics; the checkpoint release replaces leaked executor",
-        "storage with tmpfs parquet re-reads). The 50.4 s reading was the",
-        "box phase, not the code.",
-        "",
-        "## Redirect-loop hoist A/B (round 5)",
-        "",
-        "Round 4 resolved the redirect mapping INSIDE the crawl round:",
-        "every round re-derived the jump tables (3 self-joins over the hop",
-        "table) and re-distincted the full frontier. Round 5 resolves the",
-        "redirect-source set ONCE before the loop (resolve_redirect_sources",
-        "→ checkpointed redirect_map) and applies one hash join per round.",
-        "Measured on a 5-round redirect crawl (4800-page corpus,",
-        "branching 16, ~10k hop rows, local[16], fresh subprocess per rep,",
-        "arms INTERLEAVED, identical outputs: 9050 scheduled on both):",
-        "",
-        "| arm | secs (3 reps) | median | robots phase | fetch_extract |",
-        "|---|---|---|---|---|",
-        "| in-loop (round 4, a97749e) | 40.4 / 43.6 / 40.8 | 40.8 | 12.2 | 19.9 |",
-        "| hoisted (round 5) | 26.4 / 24.7 / 26.1 | 26.1 | 2.8 | 8.6 |",
-        "",
-        "1.56× faster end-to-end even after paying the one-time mapping",
-        "build (~6 s, amortized across rounds and restored free on",
-        "resume). The win lands exactly where the plan changed: the",
-        "robots/redirect phase (in-loop distinct + jump rebuild gone) and",
-        "fetch_extract (whose lineage no longer re-executes the jump-table",
-        "joins). At 10^10-URL rounds the removed per-round work was a full",
-        "frontier shuffle+agg plus three hop-table self-joins per round;",
-        "the remaining cost is one bounded-side hash join. PLANS.md",
-        "(redirect_round_join) asserts the round lineage shape.",
-        "",
-        "## Checkpoint codec (round 3)",
-        "",
-        "The per-round fetched/enqueue logs are the round's dominant bytes,",
-        "and bytes are the non-scaling resource on a shared bus (and the",
-        "store-bandwidth cost on a real cluster) while compression CPU",
-        "scales with cores. zstd replaces snappy for checkpoint writes —",
-        "measured on 3 interleaved pairs (local[4], 600k pages): zstd",
-        "127.8 / 142.0 / 153.5 s vs snappy 147.5 / 156.0 / 160.3 s (all",
-        "three adjacent pairs won, median −9%); headline local[32]",
-        "78.7 s vs 83.5 s.",
-        "",
-        "Phase seconds (best rep):",
+        f"E(1→4) = (T_N / T_4N) / 4 = {e_clean:.3f}; ceilings (2→8 workers): "
+        f"pure-CPU {ceiling:.3f}, memory-stream {membw:.3f}; "
+        f"E normalized to the CPU ceiling = {e_norm:.3f}",
         "",
         "| phase | local[1] | local[4] | local[32] |",
         "|---|---|---|---|",
-    ] + [
-        f"| {ph} | {f1['phases'].get(ph, 0)} | {f4['phases'].get(ph, 0)} | {f32['phases'].get(ph, 0)} |"
-        for ph in ("seeds", "fetch_extract", "enqueue", "absorb", "assemble")
-    ]
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
+        *(f"| {ph} | " + " | ".join(str(results[c]["phases"].get(ph, 0)) for c, _ in levels) + " |"
+          for ph in ("seeds", "fetch_extract", "enqueue", "absorb", "assemble")),
+    ]))
     print(json.dumps({
         "levels": results,
         "efficiency_1_to_4": round(e_clean, 3),

@@ -57,10 +57,10 @@ class CrawlConfig:
     bloom_hashes: int = 5
     use_bloom: bool = True          # the bloom seen filter on/off
     # Activate the seen filter only once the seen log holds this many rows.
-    # Below it the exact anti-join's build side broadcasts (no shuffle for
-    # the bloom to prune) and the filter's two Arrow passes per round are
-    # pure overhead — measured 35.5 s -> 20.7 s on the 48k-page flagship
-    # bench. 0 = always on (tests that pin the filter path set this).
+    # The exact anti-join decides every row and the filter only audits how
+    # many new rows it alone proves new, so its Arrow passes per round are
+    # overhead — gating it measured 35.5 s -> 20.7 s on the 48k-page
+    # flagship bench. 0 = always on (tests that pin the filter path set this).
     bloom_min_seen_rows: int = 500_000
     shuffle_partitions: int = 32
     frontier_buckets: int = 32      # partitioning of frontier/seen by xxhash64(url)

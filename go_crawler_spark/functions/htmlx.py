@@ -476,25 +476,37 @@ PARSE_PAGE_SCHEMA = StructType(
     [
         StructField("children", EXTRACT_SCHEMA),
         StructField("html_out", BinaryType()),
+        StructField("save_path", StringType()),
     ]
 )
 
 
 @pandas_udf(PARSE_PAGE_SCHEMA)
-def parse_page_udf(page_url: pd.Series, html: pd.Series) -> pd.DataFrame:
-    """Fused extract+rewrite (see ``parse_page``): one parse, one Arrow
-    round-trip for the heavy html column."""
+def parse_page_udf(page_url: pd.Series, kind: pd.Series, html: pd.Series) -> pd.DataFrame:
+    """Fused extract+rewrite (see ``parse_page``) plus the row's local save
+    path: one parse, one Arrow round-trip for the heavy html column. An
+    asset row yields NULL children and its asset save path; a page row
+    with no body yields zero children."""
     children: list = []
     html_out: list = []
-    for u, h in zip(page_url, html):
-        if h is None or u is None:
+    save_path: list = []
+    for u, k, h in zip(page_url, kind, html):
+        if k != "page":
+            children.append(None)
+            html_out.append(h)
+            save_path.append(asset_save_path(u))
+            continue
+        save_path.append(page_save_path(u))
+        if h is None:
             children.append([])
             html_out.append(h)
         else:
             c, ho = parse_page(u, h)
             children.append(c)
             html_out.append(ho)
-    return pd.DataFrame({"children": children, "html_out": html_out})
+    return pd.DataFrame(
+        {"children": children, "html_out": html_out, "save_path": save_path}
+    )
 
 
 # ---------------------------------------------------------------------------

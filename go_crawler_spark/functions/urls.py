@@ -335,16 +335,6 @@ def registrable_host_udf(url: pd.Series) -> pd.Series:
     return url.map(lambda u: registrable_host(u) if u is not None else "")
 
 
-@pandas_udf(StringType())
-def page_save_path_udf(url: pd.Series) -> pd.Series:
-    return url.map(page_save_path)
-
-
-@pandas_udf(StringType())
-def asset_save_path_udf(url: pd.Series) -> pd.Series:
-    return url.map(asset_save_path)
-
-
 # ---------------------------------------------------------------------------
 # SURT locality key (pure-JVM column expressions, whole-stage codegen)
 # ---------------------------------------------------------------------------

@@ -54,8 +54,6 @@ independent fixture replica in tools/gen_fixtures.py):
 from __future__ import annotations
 
 from decimal import ROUND_HALF_UP, Decimal, localcontext
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F

@@ -27,7 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, IntegerType
+from pyspark.sql.types import IntegerType
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:

@@ -4,9 +4,9 @@ One *round* is a single declarative lineage (SURVEY §3.1 Spark lifecycle):
 
     frontier → [gate: traps, robots, redirects, host slots]
              → fetch join (pages corpus)
-             → fused parse UDF (children + rewritten html, one pass)
+             → fused parse UDF (children + rewritten html + save path)
              → explode → depth filter → within-round first-writer dedup
-             → anti-join seen (bloom-pruned) → fused budget+seq
+             → anti-join seen → fused budget+seq
              → {next frontier, seen ∪, checkpoint}
 
 which replaces the reference's goroutine pipeline (cmd/crawler/main.go:61-90)
@@ -21,8 +21,8 @@ Scale posture (designed for 10^10 URLs / 1000 executors, tested local):
   never a corpus shuffle and never an on-heap cache of page content
   (operators/fetch.py);
 - the URL-seen bloom filter is *incremental*: each round absorbs only the
-  newly-seen delta (per-partition build OR-merged on the driver) — the
-  seen set is never rescanned (operators/dedup.py);
+  newly-seen delta (per-partition builds, tree-merged) — the seen set is
+  never rescanned (operators/dedup.py);
 - ``seen`` is the union of the per-round enqueue tables (append-only; the
   enqueue rows ARE the seen delta — admitted and budget-refused alike,
   queue.go:92-106 — so no separate seen write exists);
@@ -33,6 +33,17 @@ Scale posture (designed for 10^10 URLs / 1000 executors, tested local):
   resumable (C6 [EXTENSION]); lineage is truncated every round so plans
   stay O(1) deep regardless of crawl length.
 
+``run_crawl`` is a short driver loop over named stages that share one
+``_CrawlState`` (round, seq counter, pages enqueued, seen-row count,
+frontier size, seen-log tables, frontier, seen filter, trap gate):
+
+  _start            seed push (``enqueue_0``) or the resume preamble;
+  _gate             ``gate_<r>``, when any gate is on (below);
+  _j1_fetch_parse   J1, the ``fetched_<r>`` write;
+  _j2_enqueue       J2, the ``enqueue_<r+1>`` write;
+  _j3_absorb        J3, the seen filter's adaptive gate and absorb;
+  _hand_off         next frontier, manifest, release of the round's state.
+
 The scalability constant of an iterative-batch crawler is the number of
 Spark jobs per round: each is a synchronous driver round trip whose fixed
 cost (planning, scheduling, a broadcast or an adaptive shuffle stage)
@@ -40,20 +51,25 @@ does not shrink with the data. A round in the common case (no
 politeness/robots) runs three checkpoint steps:
 
   J1  fetched write   — corpus lookup + size gate + ONE fused parse per
-                        page (children array + rewritten html + save_path)
-                        so the heavy html column crosses the Python
-                        boundary exactly once and the fetched log doubles
-                        as the pages sink (pages_out = pruned view); the
-                        round's child count rides it as an observed metric
-                        and picks J2's scheduler path;
+                        row (children array + rewritten html + save_path;
+                        one Python UDF) so the heavy html column crosses
+                        the Python boundary exactly once and the fetched
+                        log doubles as the pages sink (pages_out = pruned
+                        view); the round's child count rides it as an
+                        observed metric and picks J2's scheduler path;
   J2  enqueue write   — depth gate → within-round first-writer dedup
-                        (map-side min_by) → bloom-pruned anti-join
-                        vs seen → budget + seq in one fused bucketed pass
-                        (operators/sequence.py — no range sampling, no
-                        checkpoint copy, no top-K merge); admitted and
-                        refused rows land together (the seen delta); the
-                        admission counters the driver loop needs ride this
-                        write as OBSERVED metrics (no count() actions);
+                        (map-side min_by; on small rounds the ordered
+                        pass below does it) → exact anti-join vs seen
+                        (operators/dedup.dedup_against_seen; with the
+                        filter on, its verdict marks each new row once,
+                        for the audit) → budget + seq: one single-task
+                        ordered pass on small rounds, else one fused
+                        bucketed pass (operators/sequence.py — no range
+                        sampling, no checkpoint copy, no top-K merge);
+                        admitted and refused rows land together (the seen
+                        delta); the admission counters the driver loop
+                        needs ride this write as OBSERVED metrics (no
+                        count() actions);
   J3  absorb          — one pass over the enqueue delta building the
                         per-partition seen-filter bitsets, tree-merged
                         (builders → ≤16 combiners → driver); zero jobs
@@ -96,15 +112,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from go_crawler_spark.config import CrawlConfig
 from go_crawler_spark.functions.htmlx import parse_page_udf
-from go_crawler_spark.functions.urls import (
-    asset_save_path_udf,
-    page_save_path_udf,
-    registrable_host_udf,
-)
+from go_crawler_spark.functions.urls import registrable_host_udf
 from go_crawler_spark.operators.dedup import (
     BloomFilter,
-    anti_join_seen,
-    bloom_prefilter,
     dedup_against_seen,
     first_writer_dedup,
     tree_build_filter,
@@ -150,10 +160,11 @@ class CrawlResult:
     workdir: str
     # per-round seen-filter audit: [{"round", "active", "pruned",
     # "candidates"}] — "candidates" = new-URL rows that survived the
-    # seen-dedup this round, "pruned" = the subset the bloom tier
-    # proved new (they never touched the exact anti-join); rides the
-    # enqueue write as an upstream Observation, zero extra jobs. The
-    # evidence that the adaptive gate (cfg.bloom_min_seen_rows) fired.
+    # seen-dedup this round, "pruned" = the subset the bloom filter
+    # proves new on its own (the exact anti-join decides every row);
+    # rides the enqueue write as an upstream Observation, zero extra
+    # jobs. The evidence that the adaptive gate (cfg.bloom_min_seen_rows)
+    # fired.
     seen_filter: List[dict] = field(default_factory=list)
 
 
@@ -327,7 +338,7 @@ def _enqueue_large(
 def _observe_filter_pruned(new_urls: DataFrame) -> "tuple[DataFrame, Observation]":
     """Attach a free rows-pruned-by-filter counter to the round's enqueue
     plan: ``new_urls`` carries a ``_definite`` flag (True = the bloom
-    tier proved the row new, so it skipped the exact anti-join); an upstream
+    filter proves the row new on its own); an upstream
     ``Observation`` sums it during the write action already happening — no
     extra job, no schema change (the flag is dropped here, before the
     checkpoint). ``Observation.get`` is read after the write."""
@@ -364,28 +375,13 @@ def _filter_obs_counts(obs: Observation) -> "tuple[int, int]":
     return int(row["filter_pruned"]), int(row["filter_candidates"])
 
 
-def _new_seen_filter(cfg: CrawlConfig) -> Optional[BloomFilter]:
-    """An empty bloom seen-prefilter, or None when ``cfg.use_bloom`` is
-    off. Advisory only: the exact anti-join always confirms."""
-    if not cfg.use_bloom:
-        return None
-    return BloomFilter(cfg.bloom_bits, cfg.bloom_hashes)
-
-
-def _absorb_filter(enqueue: DataFrame, filt, fan_in: int = 16):
-    """Absorb an enqueue delta into the seen filter (over ALL rows —
-    refused URLs are seen too, queue.go:92-106) via the library's two-level
-    tree merge (``operators.dedup.tree_build_filter``: per-partition builds
-    at full parallelism, ≤``fan_in`` executor-side combiners, driver merges
-    only the combiner outputs). Admission counters ride the enqueue write
-    as observed metrics (``_admission_aggs``), not this pass.
-
-    Returns the merged filter (``filt`` unchanged if the delta is empty),
-    or None when filtering is disabled."""
-    if filt is None:
-        return None
-    delta = tree_build_filter(enqueue, "url", filt, fan_in=fan_in)
-    return filt.merge(delta)
+def _absorb_filter(enqueue: DataFrame, filt: BloomFilter, fan_in: int = 16) -> BloomFilter:
+    """``filt`` with an enqueue delta absorbed (over ALL rows — refused
+    URLs are seen too, queue.go:92-106) via the library's two-level tree
+    merge (``operators.dedup.tree_build_filter``: per-partition builds at
+    full parallelism, ≤``fan_in`` executor-side combiners, driver merges
+    only the combiner outputs); ``filt`` unchanged if the delta is empty."""
+    return filt.merge(tree_build_filter(enqueue, "url", filt, fan_in=fan_in))
 
 
 def _gate_frame(
@@ -612,6 +608,352 @@ def compact_enqueue_log(
     return len(names) - 1
 
 
+@dataclass
+class _CrawlState:
+    """What the round stages share and hand on: the round about to run,
+    the counters the manifest records, the seen log's table names, the
+    frontier, the seen filter, the trap gate's templates and the per-round
+    seen-filter audit rows."""
+
+    rnd: int
+    seq_next: int
+    pages_enqueued: int
+    seen_rows: int
+    n_frontier: int
+    seen_names: List[str]
+    frontier: DataFrame
+    bloom: Optional[BloomFilter] = None
+    trap_gate: Optional[DataFrame] = None
+    seen_filter: List[dict] = field(default_factory=list)
+
+
+def _trap_gate(io, external: Optional[DataFrame]) -> Optional[DataFrame]:
+    """The trap gate's templates: the external ones ∪ the persisted
+    in-crawl census (``trap_census``), either of which may be absent."""
+    if not io.exists("trap_census"):
+        return external
+    auto = io.read("trap_census").select("template")
+    return auto if external is None else external.unionByName(auto).distinct()
+
+
+def _redirect_map(io, cfg: CrawlConfig, redirects: DataFrame,
+                  robots: Optional[DataFrame]) -> DataFrame:
+    """[EXTENSION] The loop-invariant redirect mapping, resolved ONCE
+    (operators/redirects.py::resolve_redirect_sources — bounded by the
+    redirect table, ~10^8 rows at web scale vs a 10^10 frontier) and
+    checkpointed as ``redirect_map``, so each round applies ONE hash join
+    against it and a resume restores it for free. Resolving inside the
+    loop re-derived the jump tables (3 self-joins) and re-distincted the
+    entire frontier every round."""
+    from go_crawler_spark.operators.redirects import (
+        blocked_hop_targets,
+        resolve_redirect_sources,
+    )
+
+    if not io.exists("redirect_map"):
+        # robots per-REQUEST also covers requests 2..n of a chain: hop
+        # targets robots disallows abort the chain before the forbidden
+        # request (blocked_robots_hop in the mapping). Robots is
+        # loop-invariant like the edges, so the enforcement is baked into
+        # the one-time mapping at zero per-round cost; the blocked set is
+        # bounded by the edge table's dst column.
+        blocked_hops = (
+            blocked_hop_targets(redirects, robots) if robots is not None else None
+        )
+        io.write(
+            resolve_redirect_sources(redirects, blocked_urls=blocked_hops)
+            .select("url", "final_url", "status"),
+            "redirect_map", cfg.retry,
+        )
+    return io.read("redirect_map")
+
+
+def _seed_frame(spark: SparkSession, seeds: "List[str] | DataFrame",
+                cfg: CrawlConfig) -> DataFrame:
+    """The ``enqueue_0`` rows of a seed list or a seed table. With
+    ``cfg.normalize_urls`` the seeds get the RFC 3986 identity
+    normalization first (children get it at the J2 explode): the list
+    path runs ONE bounded Spark pass (seed lists are driver-sized by
+    definition; the 10^10-URL regime uses the DataFrame path, map-only);
+    the DataFrame path must re-dedup — distinct spellings may collapse."""
+    if cfg.normalize_urls:
+        from dataclasses import replace as _dc_replace
+
+        from go_crawler_spark.functions.urls import rfc3986_normalize_expr
+
+        if isinstance(seeds, DataFrame):
+            seeds = seeds.select(rfc3986_normalize_expr(F.col("url")).alias("url"))
+            cfg = _dc_replace(cfg, seeds_unique=False)
+        else:
+            idx = spark.createDataFrame(
+                [(i, s) for i, s in enumerate(seeds)], "i long, url string"
+            )
+            seeds = [
+                r["url"]
+                for r in idx.select(
+                    "i", rfc3986_normalize_expr(F.col("url")).alias("url")
+                ).orderBy("i").collect()
+            ]
+    if isinstance(seeds, DataFrame):
+        return seeds_enqueue_df(seeds, cfg)
+    return seeds_enqueue(spark, seeds, cfg)
+
+
+def _start(spark: SparkSession, io, cfg: CrawlConfig,
+           seeds: "List[str] | DataFrame", resume_from: Optional[int],
+           trap_gate: Optional[DataFrame]) -> _CrawlState:
+    """The state before the first round: the seed push (``enqueue_0``,
+    its counters observed on the write), or the resume preamble — the
+    manifest's counters, the torn round dropped, and the frontier round
+    ``resume_from - 1`` handed over: the rows it admitted (picked by
+    column, so a compacted ``enqueue_0`` serves too) ∪ the rows its gate
+    deferred. Either way the seen filter switches on at once if the log
+    is already past its threshold."""
+    if resume_from is None:
+        stats: dict = {}
+        enq0 = io.write(
+            _seed_frame(spark, seeds, cfg), "enqueue_0", cfg.retry,
+            observe=_admission_aggs(), obs_out=stats,
+        )
+        release_pending_caches()
+        n = int(stats["n_admitted"])
+        st = _CrawlState(
+            0, n, int(stats["pages_admitted"]), int(stats["n_rows"]), n,
+            ["enqueue_0"], enq0.filter(F.col("admitted")).select(*FRONTIER_COLS),
+            trap_gate=trap_gate,
+        )
+    else:
+        man = io.get_manifest()
+        _drop_torn_round(io, resume_from)
+        seen_names = io.list_names("enqueue_")
+        frontier = io.read(*seen_names).filter(
+            F.col("admitted") & (F.col("enqueue_round") == resume_from)
+        ).select(*FRONTIER_COLS)
+        if io.exists(f"gate_{resume_from - 1}"):
+            frontier = _deferred(io.read(f"gate_{resume_from - 1}")).unionByName(frontier)
+        st = _CrawlState(
+            resume_from, man["seq_next"], man["pages_enqueued"],
+            man["seen_rows"], man["n_frontier"], seen_names, frontier,
+            trap_gate=trap_gate,
+        )
+    _j3_absorb(st, io, cfg, None)
+    return st
+
+
+def _refresh_traps(st: _CrawlState, io, cfg: CrawlConfig,
+                   external: Optional[DataFrame], min_urls: int) -> None:
+    """[EXTENSION] Re-census the fetched-so-far log (see
+    ``trap_refresh_rounds`` on :func:`run_crawl`) and re-arm the gate."""
+    fetched_logs = io.list_names("fetched_")
+    if not fetched_logs:
+        return
+    from go_crawler_spark.operators.traps import url_trap_census
+
+    fp_log = (
+        io.read(*fetched_logs)
+        .filter(F.col("fingerprint").isNotNull())
+        .select("url", "fingerprint")
+    )
+    flagged = url_trap_census(fp_log, min_urls=min_urls).filter(F.col("is_trap"))
+    if io.exists("trap_census"):
+        io.replace(flagged, "trap_census", cfg.retry)
+    else:
+        io.write(flagged, "trap_census", cfg.retry)
+    st.trap_gate = _trap_gate(io, external)
+
+
+def _gate(st: _CrawlState, io, cfg: CrawlConfig, robots, redirect_map,
+          host_slots) -> "tuple[Optional[DataFrame], int, DataFrame]":
+    """Spider-trap / robots / redirect / host-slot gates [EXTENSION],
+    evaluated ONCE: ``gate_<r>`` holds every frontier row with its verdict,
+    and J1, the skip log and the next frontier are filtered reads of it
+    (its deferred count rides the write). Returns (the gate table or None
+    when no gate is on, the deferred count, the rows to fetch now)."""
+    if not (cfg.host_slots_per_round > 0 or robots is not None
+            or host_slots is not None or st.trap_gate is not None
+            or redirect_map is not None):
+        return None, 0, st.frontier
+    gstats: dict = {}
+    gate = io.write(
+        _gate_frame(st.frontier, cfg, st.trap_gate, robots, redirect_map,
+                    host_slots),
+        f"gate_{st.rnd}", cfg.retry,
+        observe=[F.count_if(F.col("verdict") == DEFER).alias("n_deferred")],
+        obs_out=gstats,
+    )
+    fetch_now = gate.filter(F.col("verdict") == FETCH).drop("verdict")
+    return gate, int(gstats["n_deferred"]), fetch_now
+
+
+def _fetch(fetch_now: DataFrame, pages: DataFrame, cfg: CrawlConfig,
+           bcast: bool, redirected: bool) -> DataFrame:
+    """The fetch join and size gate (operators/fetch.py; hits is
+    deliberately NOT persisted). Under redirects the request goes to the
+    row's target: the join runs on ``_fetch_url``/``_fetch_host`` in place
+    of ``url``/``host``, so the fetched log records the target's host, and
+    the row's own url identity is restored after it."""
+    if redirected:
+        fetch_now = fetch_now.select(
+            F.col("_fetch_url").alias("url"), "kind", "depth", "seq",
+            F.col("_fetch_host").alias("host"),
+            F.col("url").alias("_orig_url"),
+        )
+    hits = fetch_hits(fetch_now, pages, broadcast_frontier=bcast)
+    fetched = fetch_round(fetch_now, hits, cfg.max_file_size, broadcast_frontier=bcast)
+    if redirected:
+        fetched = fetched.withColumn("url", F.col("_orig_url")).drop("_orig_url")
+    return fetched
+
+
+def _j1_fetch_parse(st: _CrawlState, io, cfg: CrawlConfig, pages: DataFrame,
+                    fetch_now: DataFrame, gate: Optional[DataFrame],
+                    redirected: bool) -> "tuple[DataFrame, int]":
+    """J1 — fetch + size gate + ONE fused parse producing children, the
+    rewritten page bytes and the save path (P1-P6 + T1 + S5 in a single
+    Arrow pass — the html column crosses the Python boundary once; assets
+    skip parse, main.go:207; a skipped page parses to nothing). The
+    fetched log doubles as the pages sink — pages_out is a column-pruned
+    view of these files, not a second copy. Returns the written log and
+    the round's child count, observed on the write (it sizes J2's
+    scheduler without a count job)."""
+    bcast = st.n_frontier <= cfg.broadcast_fetch_max_rows
+    fetched = _fetch(fetch_now, pages, cfg, bcast, redirected).withColumn(
+        "round", F.lit(st.rnd)
+    )
+    # Null the heavy html ARGUMENT, not the UDF result: Spark extracts
+    # Python UDFs out of conditionals and evaluates them for every row, so
+    # wrapping the UDF in F.when() still ships asset bodies across the
+    # Arrow boundary. With the when() inside the argument, assets pass
+    # NULL html and hit the UDF's cheap early-out — zero asset bytes
+    # cross into Python.
+    is_parsed_page = (F.col("kind") == "page") & F.col("html").isNotNull()
+    parsed = parse_page_udf("url", "kind", F.when(is_parsed_page, F.col("html")))
+    fetched = (
+        fetched
+        # content fingerprint of the PRE-rewrite bytes (JVM md5, rides the
+        # write) — feeds the in-loop trap census; null = not fetched
+        .withColumn("fingerprint", F.md5(F.col("html")))
+        .withColumn("_p", parsed)
+        .withColumn("children", F.col("_p.children"))
+        .withColumn(
+            "html",
+            F.when(is_parsed_page, F.col("_p.html_out")).otherwise(F.col("html")),
+        )
+        .withColumn("save_path", F.col("_p.save_path"))
+        .drop("_p")
+    )
+    if gate is not None:
+        fetched = fetched.unionByName(_skip_log(gate, fetched.schema, st.rnd))
+    jstats: dict = {}
+    fetched = io.write(
+        fetched, f"fetched_{st.rnd}", cfg.retry,
+        observe=_child_aggs(), obs_out=jstats,
+    )
+    return fetched, int(jstats["n_children"])
+
+
+def _j2_enqueue(st: _CrawlState, io, cfg: CrawlConfig, fetched: DataFrame,
+                n_children: int) -> "tuple[DataFrame, int]":
+    """J2 — children explode → depth gate → within-round first-writer
+    dedup → seen anti-join (with the filter's audit mark) → budget + seq
+    → ``enqueue_<r+1>``. The round's real child count, not the
+    frontier's, picks the scheduler: politeness-deferred frontier rows
+    fetch nothing and have no children. The small path's fused ordered
+    pass does the first-writer dedup itself, after the anti-join. Returns
+    the written delta and its admitted count; the counters ride the
+    write."""
+    child_url = F.col("c.url")
+    if cfg.normalize_urls:
+        from go_crawler_spark.functions.urls import rfc3986_normalize_expr
+
+        child_url = rfc3986_normalize_expr(child_url)
+    candidates = fetched.select(
+        F.col("seq").alias("parent_seq"),
+        (F.col("depth") + 1).alias("depth"),
+        F.explode("children").alias("c"),
+    ).select(
+        child_url.alias("url"),
+        F.col("c.kind").alias("kind"),
+        "depth",
+        "parent_seq",
+        F.col("c.pos").alias("pos"),
+    ).filter(F.col("depth") <= cfg.max_depth)
+    small = n_children <= SMALL_INPUT_ROWS
+    if not small:
+        candidates = first_writer_dedup(candidates, "url", ORDER_COLS)
+    seen = io.read(*st.seen_names).select("url")
+    filter_obs = None
+    if st.bloom is None:
+        new_urls = dedup_against_seen(candidates, seen, "url")
+    else:
+        new_urls, filter_obs = _observe_filter_pruned(dedup_against_seen(
+            candidates, seen, "url", st.bloom, mark_definite="_definite"
+        ))
+    enqueue = _enqueue_small if small else _enqueue_large
+    stats: dict = {}
+    enq = io.write(
+        enqueue(new_urls, max(cfg.max_count - st.pages_enqueued, 0),
+                st.seq_next, st.rnd + 1),
+        f"enqueue_{st.rnd + 1}", cfg.retry,
+        observe=_admission_aggs(), obs_out=stats,
+    )
+    release_pending_caches()
+    # seen-filter audit row: the observation is already populated (the
+    # enqueue write above executed the observed plan) — zero extra jobs
+    pruned, cand = (0, None) if filter_obs is None else _filter_obs_counts(filter_obs)
+    st.seen_filter.append({"round": st.rnd, "active": st.bloom is not None,
+                           "pruned": pruned, "candidates": cand})
+    st.seen_names.append(f"enqueue_{st.rnd + 1}")
+    n_admitted = int(stats["n_admitted"])
+    st.pages_enqueued += int(stats["pages_admitted"])
+    st.seq_next += n_admitted
+    st.seen_rows += int(stats["n_rows"])
+    return enq, n_admitted
+
+
+def _j3_absorb(st: _CrawlState, io, cfg: CrawlConfig,
+               delta: Optional[DataFrame]) -> None:
+    """J3 — the seen filter's adaptive gate and absorb. Below
+    ``cfg.bloom_min_seen_rows`` the exact anti-join's build side
+    broadcasts and the filter's Arrow passes are pure overhead, so the
+    filter stays off (zero jobs). It switches on, built from the FULL
+    seen log once, when the log crosses the threshold — at 10^10-URL
+    scale that is before round 0 — and then absorbs only each round's
+    enqueue ``delta``."""
+    if st.bloom is not None:
+        st.bloom = _absorb_filter(delta, st.bloom)
+    elif cfg.use_bloom and st.seen_rows >= cfg.bloom_min_seen_rows:
+        st.bloom = _absorb_filter(
+            io.read(*st.seen_names), BloomFilter(cfg.bloom_bits, cfg.bloom_hashes)
+        )
+
+
+def _hand_off(st: _CrawlState, io, cfg: CrawlConfig, enq: DataFrame,
+              n_admitted: int, gate: Optional[DataFrame], n_deferred: int) -> None:
+    """Close the round: the next frontier is this round's admitted rows ∪
+    its gate-deferred rows — a read, sized by the two observed counts —
+    then the manifest lands, the previous round's gate (it fed only this
+    round's frontier) goes, and the scheduler checkpoints are freed:
+    every frame that outlives the round is a parquet re-read by now, or
+    each round would leak one materialized frontier copy in executor
+    storage."""
+    st.frontier = enq.filter(F.col("admitted")).select(*FRONTIER_COLS)
+    if gate is not None:
+        st.frontier = _deferred(gate).unionByName(st.frontier)
+    st.n_frontier = n_admitted + n_deferred
+    io.put_manifest(
+        {"round": st.rnd, "seq_next": st.seq_next,
+         "pages_enqueued": st.pages_enqueued, "seen_rows": st.seen_rows,
+         "n_frontier": st.n_frontier,
+         "config": {"max_count": cfg.max_count, "max_depth": cfg.max_depth,
+                    "host_slots_per_round": cfg.host_slots_per_round}},
+    )
+    if st.rnd > 0:
+        io.delete(f"gate_{st.rnd - 1}")
+    release_pending_checkpoints()
+    st.rnd += 1
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -636,15 +978,12 @@ def run_crawl(
     ``skipped_trap`` (staying seen, like robots blocks).
 
     ``redirects`` [EXTENSION] is an optional ``(src_url, dst_url)`` hop
-    table. The loop-invariant source mapping is resolved ONCE before the
-    loop (:func:`go_crawler_spark.operators.redirects.
-    resolve_redirect_sources`, the Go client's 10-request budget) and
-    checkpointed as ``redirect_map`` (restored on resume — NOTE the
-    mapping bakes the per-hop robots enforcement of the rules passed at
-    FIRST materialization, so resume legs must pass the same robots
-    table; changed rules require a fresh workdir or deleting
-    ``redirect_map``); each round's gate applies one hash join against it
-    (:func:`_gate_frame`). Budget-stopped chains are logged
+    table, resolved once into the checkpointed ``redirect_map``
+    (:func:`_redirect_map`, the Go client's 10-request budget; restored on
+    resume — NOTE the mapping bakes the per-hop robots enforcement of the
+    rules passed at FIRST materialization, so resume legs must pass the
+    same robots table; changed rules require a fresh workdir or deleting
+    ``redirect_map``). Budget-stopped chains are logged
     ``skipped_redirect`` (staying seen: Go's client would error after
     burning its budget), and resolved rows fetch the FINAL target's
     content under their original URL identity (reference parity: the Go
@@ -658,11 +997,9 @@ def run_crawl(
     templates join the gate — a trap that emerges mid-crawl is cut off at
     the next refresh without an operator round-trip or a restart. The
     census scans only (url, fingerprint) — column-pruned parquet, never
-    page bytes — and its bounded output checkpoints as ``trap_census``, so
-    ``resume_crawl`` restores the gate and per-round gating reads the tiny
-    table instead of re-censusing. Refresh cost is one column-pruned scan
-    of the fetched log every R rounds — pick R to amortize (the gate keeps
-    a 10^10-URL frontier from burning budget on minted URLs, which the
+    page bytes — and checkpoints as ``trap_census``, so ``resume_crawl``
+    restores the gate. Pick R to amortize the scan (the gate keeps a
+    10^10-URL frontier from burning budget on minted URLs, which the
     reference cannot do at all: internal/queue.go:101-106 just fills up).
 
     Pass ``timing={}`` to collect per-phase wall-clock totals."""
@@ -677,416 +1014,65 @@ def run_crawl(
         import tempfile
 
         workdir = tempfile.mkdtemp(prefix="crawl_")
-
     io = ParquetTableIO(spark, workdir)
 
-    politeness_mode = (cfg.host_slots_per_round > 0 or robots is not None
-                       or host_slots is not None)
-
-    # [EXTENSION] the redirect mapping is loop-invariant: resolve the
-    # redirect-SOURCE set once (operators/redirects.py::
-    # resolve_redirect_sources — bounded by the redirect table, ~10^8 rows
-    # at web scale vs a 10^10 frontier), checkpoint it, and let each round
-    # apply ONE hash join against it. Resolving inside the loop re-derived
-    # the jump tables (3 self-joins) and re-distincted the entire frontier
-    # every round. A persisted mapping also restores for free on resume.
     redirect_map = None
     if redirects is not None:
-        from go_crawler_spark.operators.redirects import (
-            blocked_hop_targets,
-            resolve_redirect_sources,
-        )
-
         t = time.perf_counter()
-        if not io.exists("redirect_map"):
-            # robots per-REQUEST also covers requests 2..n of a chain:
-            # hop targets robots disallows abort the chain before the
-            # forbidden request (blocked_robots_hop in the mapping).
-            # Robots is loop-invariant like the edges, so the enforcement
-            # is baked into the one-time mapping at zero per-round cost;
-            # the blocked set is bounded by the edge table's dst column.
-            blocked_hops = (
-                blocked_hop_targets(redirects, robots)
-                if robots is not None else None
-            )
-            io.write(
-                resolve_redirect_sources(
-                    redirects, blocked_urls=blocked_hops
-                ).select("url", "final_url", "status"),
-                "redirect_map", cfg.retry,
-            )
-        redirect_map = io.read("redirect_map")
+        redirect_map = _redirect_map(io, cfg, redirects, robots)
         _tick("redirect_map", t)
 
-    # trap gate state: external templates (normalized to a template list)
-    # ∪ the latest in-loop census; a persisted trap_census (resume, or a
-    # prior refresh in this workdir) re-arms the gate immediately
     external_traps = None
     if trap_templates is not None:
-        ext = trap_templates
-        if "is_trap" in ext.columns:
-            ext = ext.filter(F.col("is_trap"))
-        external_traps = ext.select("template")
-    trap_gate_tbl = external_traps
-    if trap_refresh_rounds > 0 and io.exists("trap_census"):
-        saved = io.read("trap_census").select("template")
-        trap_gate_tbl = (
-            saved if external_traps is None
-            else external_traps.unionByName(saved).distinct()
-        )
+        if "is_trap" in trap_templates.columns:
+            trap_templates = trap_templates.filter(F.col("is_trap"))
+        external_traps = trap_templates.select("template")
 
-    if cfg.normalize_urls:
-        # RFC 3986 identity normalization at the frontier boundary: seeds
-        # here, children at the J2 explode below. The list path runs ONE
-        # bounded Spark pass (seed lists are driver-sized by definition;
-        # the 10^10-URL regime uses the DataFrame path, map-only); the
-        # DataFrame path must re-dedup — distinct spellings may collapse.
-        from dataclasses import replace as _dc_replace
-
-        from go_crawler_spark.functions.urls import rfc3986_normalize_expr
-
-        if isinstance(seeds, DataFrame):
-            seeds = seeds.select(
-                rfc3986_normalize_expr(F.col("url")).alias("url")
-            )
-            cfg = _dc_replace(cfg, seeds_unique=False)
-        else:
-            idx = spark.createDataFrame(
-                [(i, s) for i, s in enumerate(seeds)], "i long, url string"
-            )
-            seeds = [
-                r["url"]
-                for r in idx.select(
-                    "i", rfc3986_normalize_expr(F.col("url")).alias("url")
-                ).orderBy("i").collect()
-            ]
-
+    t = time.perf_counter()
+    st = _start(spark, io, cfg, seeds, _resume_from,
+                _trap_gate(io, external_traps) if trap_refresh_rounds > 0
+                else external_traps)
     if _resume_from is None:
+        _tick("seeds", t)
+    while st.rnd < max_rounds and st.n_frontier > 0:
         t = time.perf_counter()
-        enq0_df = (
-            seeds_enqueue_df(seeds, cfg)
-            if isinstance(seeds, DataFrame)
-            else seeds_enqueue(spark, seeds, cfg)
-        )
-        stats0: dict = {}
-        enq0 = io.write(
-            enq0_df, "enqueue_0", cfg.retry,
-            observe=_admission_aggs(), obs_out=stats0,
-        )
-        release_pending_caches()
-        # adaptive seen-filter gate: below cfg.bloom_min_seen_rows the
-        # exact anti-join's build side broadcasts and the filter's Arrow
-        # passes are pure overhead; it switches on (built from the full
-        # log, then absorbed incrementally) once the log crosses the
-        # threshold — at 10^10-URL scale that is round 0.
-        seen_rows = int(stats0["n_rows"])
-        bloom = None
-        if seen_rows >= cfg.bloom_min_seen_rows:
-            bloom = _absorb_filter(enq0, _new_seen_filter(cfg))
-        t = _tick("seeds", t)
-        n_frontier = int(stats0["n_admitted"])
-        pages_enqueued = int(stats0["pages_admitted"])
-        seq_next = n_frontier
-        seen_names = ["enqueue_0"]
-        frontier = enq0.filter(F.col("admitted")).select(*FRONTIER_COLS)
-        rnd = 0
-    else:
-        man = io.get_manifest()
-        rnd = _resume_from
-        seq_next = man["seq_next"]
-        pages_enqueued = man["pages_enqueued"]
-        seen_rows = man["seen_rows"]
-        n_frontier = man["n_frontier"]
-        _drop_torn_round(io, rnd)
-        seen_names = io.list_names("enqueue_")
-        all_enq = io.read(*seen_names)
-        bloom = None
-        if seen_rows >= cfg.bloom_min_seen_rows:
-            bloom = _absorb_filter(all_enq, _new_seen_filter(cfg))
-        # the frontier round rnd-1 handed over: the rows it admitted
-        # (picked by column, so a compacted enqueue_0 serves too) ∪ the
-        # rows its gate deferred
-        frontier = all_enq.filter(
-            F.col("admitted") & (F.col("enqueue_round") == rnd)
-        ).select(*FRONTIER_COLS)
-        if io.exists(f"gate_{rnd - 1}"):
-            frontier = _deferred(io.read(f"gate_{rnd - 1}")).unionByName(frontier)
-    seen_filter_log: List[dict] = []
-    while rnd < max_rounds and n_frontier > 0:
-        t = time.perf_counter()
-
-        # [EXTENSION] in-loop trap refresh (see trap_refresh_rounds above)
-        if (trap_refresh_rounds > 0 and rnd > 0
-                and rnd % trap_refresh_rounds == 0):
-            fetched_logs = io.list_names("fetched_")
-            if fetched_logs:
-                from go_crawler_spark.operators.traps import url_trap_census
-
-                fp_log = (
-                    io.read(*fetched_logs)
-                    .filter(F.col("fingerprint").isNotNull())
-                    .select("url", "fingerprint")
-                )
-                flagged = url_trap_census(
-                    fp_log, min_urls=trap_min_urls
-                ).filter(F.col("is_trap"))
-                if io.exists("trap_census"):
-                    io.replace(flagged, "trap_census", cfg.retry)
-                else:
-                    io.write(flagged, "trap_census", cfg.retry)
-                auto = io.read("trap_census").select("template")
-                trap_gate_tbl = (
-                    auto if external_traps is None
-                    else external_traps.unionByName(auto).distinct()
-                )
+        if (trap_refresh_rounds > 0 and st.rnd > 0
+                and st.rnd % trap_refresh_rounds == 0):
+            _refresh_traps(st, io, cfg, external_traps, trap_min_urls)
             t = _tick("trap_refresh", t)
-
-        seen = io.read(*seen_names).select("url")
-
-        # spider-trap / robots / redirect / host-slot gates [EXTENSION],
-        # evaluated ONCE: gate_<rnd> holds every frontier row with its
-        # verdict, and J1, the skip log and the next frontier are filtered
-        # reads of it (its deferred count rides the write)
-        gate, n_deferred, fetch_now = None, 0, frontier
-        if (politeness_mode or trap_gate_tbl is not None
-                or redirect_map is not None):
-            gstats: dict = {}
-            gate = io.write(
-                _gate_frame(frontier, cfg, trap_gate_tbl, robots,
-                            redirect_map, host_slots),
-                f"gate_{rnd}", cfg.retry,
-                observe=[F.count_if(F.col("verdict") == DEFER).alias("n_deferred")],
-                obs_out=gstats,
-            )
-            n_deferred = int(gstats["n_deferred"])
-            fetch_now = gate.filter(F.col("verdict") == FETCH).drop("verdict")
-            if redirect_map is not None:
-                # the request goes to the target, whose host the fetched
-                # log records; the url identity is restored after J1's join
-                fetch_now = fetch_now.select(
-                    F.col("_fetch_url").alias("url"), "kind", "depth", "seq",
-                    F.col("_fetch_host").alias("host"),
-                    F.col("url").alias("_orig_url"),
-                )
+        gate, n_deferred, fetch_now = _gate(st, io, cfg, robots, redirect_map,
+                                            host_slots)
         t = _tick("gate", t)
-
-        # J1 — fetch + size gate + ONE fused parse producing children AND
-        # the rewritten page bytes (P1-P6 + T1 in a single Arrow pass — the
-        # html column crosses the Python boundary once; assets skip parse,
-        # main.go:207; a skipped page parses to nothing). save_path (S5)
-        # lands here too, so the fetched log doubles as the pages sink —
-        # pages_out is a column-pruned view of these files, not a second
-        # copy. hits is deliberately NOT persisted (operators/fetch.py).
-        bcast = n_frontier <= cfg.broadcast_fetch_max_rows
-        hits = fetch_hits(fetch_now, pages, broadcast_frontier=bcast)
-        fetched = fetch_round(
-            fetch_now, hits, cfg.max_file_size, broadcast_frontier=bcast
-        ).withColumn("round", F.lit(rnd))
-        if redirects is not None:
-            fetched = (
-                fetched.withColumn("url", F.col("_orig_url"))
-                .drop("_orig_url")
-            )
-        child_t = "array<struct<kind:string,url:string,pos:int>>"
-        # Null the heavy html ARGUMENT, not the UDF result: Spark extracts
-        # Python UDFs out of conditionals and evaluates them for every row,
-        # so wrapping the UDF in F.when() still ships asset bodies across
-        # the Arrow boundary. With the when() inside the argument, assets
-        # pass NULL html and hit the UDF's cheap early-out — zero asset
-        # bytes cross into Python.
-        is_parsed_page = (F.col("kind") == "page") & F.col("html").isNotNull()
-        parsed = parse_page_udf(
-            "url", F.when(is_parsed_page, F.col("html"))
-        )
-        fetched = (
-            fetched
-            # content fingerprint of the PRE-rewrite bytes (JVM md5, rides
-            # the write) — feeds the in-loop trap census; null = not fetched
-            .withColumn("fingerprint", F.md5(F.col("html")))
-            .withColumn("_p", parsed)
-            .withColumn(
-                "children",
-                F.when(
-                    F.col("kind") == "page",
-                    F.coalesce(F.col("_p.children"), F.lit([]).cast(child_t)),
-                ).otherwise(F.lit(None).cast(child_t)),
-            )
-            .withColumn(
-                "html",
-                F.when(is_parsed_page, F.col("_p.html_out")).otherwise(
-                    F.col("html")
-                ),
-            )
-            .withColumn(
-                "save_path",
-                F.when(F.col("kind") == "page", page_save_path_udf("url"))
-                .otherwise(asset_save_path_udf("url")),
-            )
-            .drop("_p")
-        )
-        if gate is not None:
-            fetched = fetched.unionByName(_skip_log(gate, fetched.schema, rnd))
-        # the child count rides the write as an observed metric: it sizes
-        # the J2 scheduler below without a count job
-        jstats: dict = {}
-        fetched = io.write(
-            fetched, f"fetched_{rnd}", cfg.retry,
-            observe=_child_aggs(), obs_out=jstats,
-        )
+        fetched, n_children = _j1_fetch_parse(st, io, cfg, pages, fetch_now,
+                                              gate, redirect_map is not None)
         t = _tick("fetch_extract", t)
-
-        # J2 — children explode → depth gate → within-round first-writer
-        # dedup → bloom-pruned anti-join vs seen → budget + seq → enqueue
-        if cfg.normalize_urls:
-            from go_crawler_spark.functions.urls import rfc3986_normalize_expr
-
-            _child_url = rfc3986_normalize_expr(F.col("c.url"))
-        else:
-            _child_url = F.col("c.url")
-        children = (
-            fetched.select(
-                F.col("seq").alias("parent_seq"),
-                F.col("depth").alias("parent_depth"),
-                F.explode("children").alias("c"),
-            )
-            .select(
-                _child_url.alias("url"),
-                F.col("c.kind").alias("kind"),
-                (F.col("parent_depth") + 1).alias("depth"),
-                "parent_seq",
-                F.col("c.pos").alias("pos"),
-            )
-        )
-        candidates = children.filter(F.col("depth") <= cfg.max_depth)
-        budget_remaining = max(cfg.max_count - pages_enqueued, 0)
-        # the round's real child count, not the frontier's: politeness-
-        # deferred frontier rows fetch nothing and have no children
-        small = int(jstats["n_children"]) <= SMALL_INPUT_ROWS
-        verdicts = None
-        filter_obs = None
-        if small:
-            # first-writer dedup happens inside the fused ordered pass
-            new_urls = dedup_against_seen(
-                candidates, seen, "url", bloom,
-                mark_definite="_definite" if bloom is not None else None,
-            )
-            if bloom is not None:
-                new_urls, filter_obs = _observe_filter_pruned(new_urls)
-            enq = _enqueue_small(new_urls, budget_remaining, seq_next, rnd + 1)
-        else:
-            candidates = first_writer_dedup(candidates, "url", ORDER_COLS)
-            if bloom is None:
-                new_urls = dedup_against_seen(candidates, seen, "url", None)
-            else:
-                # evaluate the filter verdict ONCE: the definite-new /
-                # maybe-seen branches below would otherwise each recompute
-                # the python membership pass over all candidates
-                verdicts = bloom_prefilter(candidates, bloom, "url").persist()
-                definitely_new = verdicts.filter(~F.col("_maybe")).drop(
-                    "_h1", "_h2", "_maybe"
-                ).withColumn("_definite", F.lit(True))
-                maybe = verdicts.filter(F.col("_maybe")).drop("_h1", "_h2", "_maybe")
-                new_urls = definitely_new.unionByName(
-                    anti_join_seen(maybe, seen, "url")
-                    .withColumn("_definite", F.lit(False))
-                )
-                new_urls, filter_obs = _observe_filter_pruned(new_urls)
-            enq = _enqueue_large(new_urls, budget_remaining, seq_next, rnd + 1)
-        stats: dict = {}
-        enq = io.write(
-            enq, f"enqueue_{rnd + 1}", cfg.retry,
-            observe=_admission_aggs(), obs_out=stats,
-        )
-        release_pending_caches()
-        if verdicts is not None:
-            verdicts.unpersist()
-        # seen-filter audit row: the observation is already populated (the
-        # enqueue write above executed the observed plan) — zero extra jobs
-        flt = {"round": rnd, "active": bloom is not None,
-               "pruned": 0, "candidates": None}
-        if filter_obs is not None:
-            pruned, cand = _filter_obs_counts(filter_obs)
-            flt["pruned"] = pruned
-            flt["candidates"] = cand
-        seen_filter_log.append(flt)
-        seen_names.append(f"enqueue_{rnd + 1}")
-        n_admitted = int(stats["n_admitted"])
-        pages_enqueued += int(stats["pages_admitted"])
-        seq_next += n_admitted
+        enq, n_admitted = _j2_enqueue(st, io, cfg, fetched, n_children)
         t = _tick("enqueue", t)
-
-        # J3 — absorb the delta into the seen filter (admission counters
-        # already arrived as observed metrics on the J2 write; while the
-        # filter is below its activation threshold — or disabled — this
-        # phase costs zero jobs)
-        seen_rows += int(stats["n_rows"])
-        if bloom is not None:
-            bloom = _absorb_filter(enq, bloom)
-        elif seen_rows >= cfg.bloom_min_seen_rows:
-            # threshold crossed: build from the FULL log once; later
-            # rounds absorb only their delta
-            bloom = _absorb_filter(io.read(*seen_names), _new_seen_filter(cfg))
+        _j3_absorb(st, io, cfg, enq)
         t = _tick("absorb", t)
-
-        # next frontier: this round's admitted rows ∪ its gate-deferred
-        # rows — a read, sized by the two observed counts
-        frontier = enq.filter(F.col("admitted")).select(*FRONTIER_COLS)
-        if gate is not None:
-            frontier = _deferred(gate).unionByName(frontier)
-        n_frontier = n_admitted + n_deferred
-
-        io.put_manifest(
-            {"round": rnd, "seq_next": seq_next, "pages_enqueued": pages_enqueued,
-             "seen_rows": seen_rows, "n_frontier": n_frontier,
-             "config": {"max_count": cfg.max_count, "max_depth": cfg.max_depth,
-                        "host_slots_per_round": cfg.host_slots_per_round}},
-        )
-        # the previous round's gate fed only this round's frontier
-        if rnd > 0:
-            io.delete(f"gate_{rnd - 1}")
-        # every frame that outlives the round (enq, frontier) is a parquet
-        # re-read by now — free the scheduler checkpoints, or each round
-        # leaks one materialized frontier copy in executor storage
-        release_pending_checkpoints()
-        rnd += 1
+        _hand_off(st, io, cfg, enq, n_admitted, gate, n_deferred)
 
     t = time.perf_counter()
     release_pending_checkpoints()  # covers the pre-loop seeds path too
-    result = _assemble_result(spark, io, workdir, rnd, cfg)
-    result.seen_filter = seen_filter_log
+    result = _assemble_result(spark, io, workdir, st.rnd)
+    result.seen_filter = st.seen_filter
     _tick("assemble", t)
     return result
 
 
-def _assemble_result(spark: SparkSession, io, workdir: str, rounds: int, cfg: CrawlConfig) -> CrawlResult:
+def _assemble_result(spark: SparkSession, io, workdir: str, rounds: int) -> CrawlResult:
     """Build the result tables from the per-round checkpoint logs — metrics
     in one job over the stored extraction arrays (M1 counter names from
     internal/metrics.go:14-18)."""
-
-    def union_all(prefix: str) -> Optional[DataFrame]:
-        names = []
-        for n in io.list_names(prefix):
-            try:
-                int(n[len(prefix):])
-            except ValueError:
-                continue
-            names.append(n)
-        if not names:
-            return None
-        df = None
-        for n in names:
-            part = io.read(n)
-            df = part if df is None else df.unionByName(part)
-        return df
-
-    enqueue = union_all("enqueue_")
+    enqueue = io.read(*io.list_names("enqueue_"))
     schedule = enqueue.filter(F.col("admitted")).select(
         "url", "kind", "depth", "seq", "host", "enqueue_round"
     )
 
     # the fetched log holds the gate-skipped rows too (their skip status,
     # no content); the pages sink and the metrics count fetches only
-    raw_fetched = union_all("fetched_")
+    fetched_names = io.list_names("fetched_")
+    raw_fetched = io.read(*fetched_names) if fetched_names else None
     fetched = None
     if raw_fetched is not None:
         fetched = raw_fetched.select(

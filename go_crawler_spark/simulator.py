@@ -35,7 +35,7 @@ from typing import Dict, List, Optional, Tuple
 
 from go_crawler_spark.config import CrawlConfig
 from go_crawler_spark.functions.htmlx import resolve_links_and_assets
-from go_crawler_spark.functions.urls import registrable_host, host_of
+from go_crawler_spark.functions.urls import registrable_host
 from urllib.parse import urlsplit
 
 

@@ -64,14 +64,17 @@ def to_cdxj_lines(
     """One CDXJ line per capture: ``<surt> <ts14> {json}`` with the fixed
     key order (url, digest, length). Map-only literal concat — both
     engines emit identical bytes, unlike generic JSON serializers. The
-    URL's ``\\`` and ``"`` are escaped, so the payload is valid JSON for
-    any URL free of control characters."""
+    URL's ``\\``, ``"`` and control characters (U+0000-U+001F, as
+    ``\\u00XX``) are escaped, so the payload is valid JSON for any URL."""
     r = cdx_records(pages, url_col, ts_col, payload_col)
-    # a JSON string: escape the backslash first, then the quote
+    # a JSON string: escape the backslash first, then the quote and the
+    # control characters, whose escapes carry a backslash of their own
     url_json = F.replace(
         F.replace(F.col("url"), F.lit("\\"), F.lit("\\\\")),
         F.lit('"'), F.lit('\\"'),
     )
+    for c in range(0x20):
+        url_json = F.replace(url_json, F.lit(chr(c)), F.lit(f"\\u{c:04x}"))
     line = F.concat(
         F.col("surt_key"),
         F.lit(" "),

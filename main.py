@@ -50,11 +50,11 @@ def parse_args(argv=None) -> argparse.Namespace:
                    help="politeness: max fetches per host per round (0=off)")
     p.add_argument("--seen-filter-min-rows", type=int, default=None,
                    help="seen-log rows below which the bloom "
-                        "prefilter stays dormant (exact anti-join "
-                        "broadcasts anyway); 0 = always on")
+                        "filter stays dormant; 0 = always on")
     p.add_argument("--seen-filter", choices=("bloom", "none"), default=None,
-                   help="bloom-prune the seen anti-join (default) or run "
-                        "the exact anti-join alone")
+                   help="keep the bloom seen filter, which audits how many "
+                        "new URLs it alone proves new (default), or not; "
+                        "the exact anti-join decides either way")
     p.add_argument("--trap-templates", help="parquet of spider-trap "
                    "templates (a url_trap_census output or a bare "
                    "template column); matching frontier URLs are blocked "

@@ -5,7 +5,6 @@ trained merge tables — including words never seen in training."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from go_crawler_spark.operators.bpe import (
     bpe_encode_docs,

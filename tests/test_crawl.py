@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+import go_crawler_spark.plans.crawl as crawlmod
 from go_crawler_spark.config import CrawlConfig
 from go_crawler_spark.datagen import default_seeds, generate_corpus_dict, generate_pages_df
 from go_crawler_spark.plans.crawl import run_crawl
@@ -114,24 +115,29 @@ def test_filter_activates_mid_crawl(spark, pages_df, corpus):
     _assert_match(spark, pages_df, corpus, cfg)
 
 
-def test_seen_filter_audit_log(spark, pages_df, corpus):
+def test_seen_filter_audit_log(spark, pages_df, corpus, monkeypatch):
     """CrawlResult.seen_filter is the observable evidence of which dedup
     tier engaged (VERDICT r3 ask #7): with the filter pinned on it reports
-    active rounds and a positive pruned count (rows the bloom proved new,
-    skipping the exact anti-join); with the adaptive default dormant at
-    this scale it reports inactive rounds and zero pruned — while both
-    configs produce identical crawls (test_basic_bfs*)."""
+    active rounds and a positive pruned count (rows the bloom proves new
+    on its own), on the single-task scheduler path and on the distributed
+    one alike, and both crawls equal the simulator; with the adaptive
+    default dormant at this scale it reports inactive rounds and zero
+    pruned — while both configs produce identical crawls
+    (test_basic_bfs*)."""
     cfg_on = CrawlConfig(max_count=40, use_bloom=True, bloom_min_seen_rows=0)
-    res_on = run_crawl(spark, pages_df, default_seeds(), cfg_on)
-    assert res_on.seen_filter, "audit log must cover every loop round"
-    assert all(e["active"] for e in res_on.seen_filter)
-    # every round's new rows are split pruned/joined: 0 <= pruned <= candidates
-    assert all(
-        e["candidates"] is not None and 0 <= e["pruned"] <= e["candidates"]
-        for e in res_on.seen_filter
-    )
-    # on a fresh filter most genuinely-new URLs are definite-new
-    assert sum(e["pruned"] for e in res_on.seen_filter) > 0
+    for small_input_rows in (crawlmod.SMALL_INPUT_ROWS, -1):
+        monkeypatch.setattr(crawlmod, "SMALL_INPUT_ROWS", small_input_rows)
+        res_on = _assert_match(spark, pages_df, corpus, cfg_on)
+        assert res_on.seen_filter, "audit log must cover every loop round"
+        assert all(e["active"] for e in res_on.seen_filter)
+        # pruned counts a subset of each round's new rows
+        assert all(
+            e["candidates"] is not None and 0 <= e["pruned"] <= e["candidates"]
+            for e in res_on.seen_filter
+        )
+        # on a fresh filter most genuinely-new URLs are definite-new
+        assert sum(e["pruned"] for e in res_on.seen_filter) > 0
+    monkeypatch.undo()
 
     cfg_off = CrawlConfig(max_count=40, use_bloom=True)  # gate stays shut
     res_off = run_crawl(spark, pages_df, default_seeds(), cfg_off)

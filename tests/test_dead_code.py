@@ -1,6 +1,7 @@
 """Guard against dead code: every top-level function or class of the
 package must be named somewhere else in the repo's Python files (tests
-count as references). A helper nothing calls is deleted, not kept."""
+count as references), and every imported name must be used in the file
+that imports it. A helper nothing calls is deleted, not kept."""
 
 from __future__ import annotations
 
@@ -41,3 +42,46 @@ def test_every_package_definition_is_referenced():
     assert not unreferenced, "no reference outside the definition: " + ", ".join(
         unreferenced
     )
+
+
+# the benchmark (perfbench/) is checked by its own suite
+_IMPORT_SCOPE = ("go_crawler_spark", "tools", "tests",
+                 "main.py", "bench.py", "__spark_entry__.py")
+
+
+def _used_names(tree: ast.AST) -> set[str]:
+    """Every name the module reads, string annotations included."""
+    used = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+        ann = getattr(node, "annotation", None) or getattr(node, "returns", None)
+        if isinstance(ann, ast.Constant) and isinstance(ann.value, str):
+            used |= {n.id for n in ast.walk(ast.parse(ann.value, mode="eval"))
+                     if isinstance(n, ast.Name)}
+    return used
+
+
+def test_every_import_is_used():
+    unused = []
+    for path in sorted(_py_files()):
+        rel = path.relative_to(ROOT)
+        if rel.parts[0] not in _IMPORT_SCOPE or path.name == "__init__.py":
+            continue
+        src = path.read_text(encoding="utf-8")
+        lines = src.splitlines()
+        tree = ast.parse(src)
+        used = _used_names(tree)
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            span = lines[node.lineno - 1:node.end_lineno]
+            if any("noqa: F401" in line for line in span):
+                continue
+            for alias in node.names:
+                name = (alias.asname or alias.name).split(".")[0]
+                if name not in used:
+                    unused.append(f"{rel}:{node.lineno} {name}")
+    assert not unused, "imported but unused: " + ", ".join(unused)

@@ -3,8 +3,6 @@ each violating exactly one rule relative to a passing base document."""
 
 from __future__ import annotations
 
-import pytest
-
 from go_crawler_spark.operators.gopher import gopher_quality_gate
 
 # 60 words, mean length in [3,10], no symbols, no bullets/ellipses, all

@@ -11,8 +11,6 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import functions as F
-
 from go_crawler_spark.operators.dedup_corpus import containment_verify
 from go_crawler_spark.operators.index import inverted_index
 from go_crawler_spark.operators.lines import line_filters

@@ -139,7 +139,6 @@ def test_driver_window_staleness_bounded():
     driver staleness of two rounds, the standing rotation contract."""
     import glob
     import json
-    import re
 
     names = list(entry_mod.queries())
     window = set(names[:50])

@@ -11,7 +11,7 @@ import tempfile
 import pytest
 
 from go_crawler_spark.config import CrawlConfig
-from go_crawler_spark.datagen import default_seeds, generate_corpus_dict, generate_pages_df
+from go_crawler_spark.datagen import default_seeds, generate_pages_df
 from go_crawler_spark.plans.crawl import resume_crawl, run_crawl
 
 N_PAGES = 48

@@ -5,7 +5,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from go_crawler_spark.functions.robots import (
     parse_robots_body,

@@ -69,7 +69,6 @@ def test_semdedup_threshold_one_keeps_exact_dups_only(spark):
 # ---------------------------------------------------------------------------
 
 import numpy as np
-import pytest
 from hypothesis import given, settings, strategies as st
 
 from go_crawler_spark.operators.semdedup import (
@@ -133,8 +132,6 @@ def test_semdedup_giant_skewed_cluster_kmeans_split(spark):
     # prune task stays <= cap, and per-bundle min ids still win (ids are
     # interleaved so the 3 smallest ids cover the 3 bundles = the split's
     # sub-centroids)
-    import pandas as pd
-
     bundle = 60
     cap = 70
     rows = []
@@ -180,7 +177,6 @@ def test_semdedup_identical_vectors_salt_fallback(spark):
 
 
 def test_split_oversized_bounds_every_group(spark):
-    from pyspark.sql import functions as F
     from go_crawler_spark.operators.semdedup import _split_oversized
 
     n, cap = 300, 32

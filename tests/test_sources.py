@@ -137,6 +137,35 @@ def test_cdxj_payload_is_json_for_quote_and_backslash(spark):
     assert got == sorted(urls)
 
 
+def test_cdxj_payload_is_json_for_control_characters(spark, tmp_path):
+    """Control characters (U+0000-U+001F) are escaped as ``\\u00XX`` by
+    the engine and by the DuckDB oracle alike: the payload of a URL
+    holding a tab, ``\\x01`` or ``\\x1f`` — or a ``\\`` and a ``"``
+    — decodes back to the URL, and both engines emit the same lines."""
+    import json
+
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry_mod
+
+    sources = ["a\tb", "c\x01d", "e\x1ff", 'g\\"h', 'i\\\t"j']
+    pd.DataFrame({
+        "doc_id": range(len(sources)), "source": sources, "text": ["body"] * len(sources),
+    }).to_parquet(tmp_path / "documents.parquet")
+    want = sorted(f"https://{s}.example.com/doc{i}" for i, s in enumerate(sources))
+
+    lines = [r["cdxj"] for r in
+             entry_mod.queries()["cdx_index_lines"](spark, str(tmp_path)).collect()]
+    assert sorted(json.loads(line.split(" ", 2)[2])["url"] for line in lines) == want
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    oracle = [r[0] for r in con.execute(
+        f"SELECT cdxj FROM ({entry_mod.oracle_sql()['cdx_index_lines']})").fetchall()]
+    assert sorted(oracle) == sorted(lines)
+
+
 def test_cdxj_line_golden_and_sorted_write_shape(spark):
     """CDXJ golden line (fixed key order, octet length, md5 digest) and
     the global-order discipline: repartitionByRange + sortWithinPartitions

@@ -145,21 +145,20 @@ def main() -> None:
     )
 
     # 3. seen anti-join → no distinct/aggregate on the seen build side
-    from go_crawler_spark.operators.dedup import anti_join_seen
+    from go_crawler_spark.operators.dedup import BloomFilter, dedup_against_seen
 
     seen = docs.select(F.col("doc_id").cast("string").alias("url"))
     cands = docs.select(F.col("doc_id").cast("string").alias("url"), "lang")
     audit(
         "seen_anti_join (left_anti, seen side un-aggregated)",
-        anti_join_seen(cands, seen),
+        dedup_against_seen(cands, seen),
         {"LeftAnti": True, "HashAggregate": False},
     )
 
     # 3b. filter-tier dedup with the pruned-rows audit: the Observation
     # rides the plan as a CollectMetrics node (the counter costs no extra
-    # job), the exact anti-join still confirms the maybe-side, and the
-    # _definite flag is projected away before any checkpoint
-    from go_crawler_spark.operators.dedup import BloomFilter, dedup_against_seen
+    # job), the exact anti-join decides every row, and the _definite flag
+    # is projected away before any checkpoint
     from go_crawler_spark.plans.crawl import _observe_filter_pruned
 
     flt = BloomFilter(1 << 16, 4)
