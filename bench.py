@@ -1,9 +1,13 @@
 #!/usr/bin/env python
 """Benchmark harness.
 
-Default: run the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON
-line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+Default: run the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default:
+``SF_DIR`` below) on ``local[$SPARK_GRAFT_CPUS]``, write the full
+result (every query's time, both headline paths' details) to
+``bench_full.json`` in the working directory, and print ONE compact JSON
+line last: {"metric": ..., "value": N, "unit": "sec", "queries_sec": ...,
+"frontier_round": {..., "phases": {...}}, "crawl_flagship": {...},
+"full": <path of bench_full.json>}.
 
 ``--scaling``: run the same frontier-round job on identical input at
 local[1] (N), local[4] (4N), and local[32], fresh process per level+rep
@@ -133,7 +137,8 @@ def crawl_bench(spark, sf_dir: str, cpus: int = CPUS,
         shuffle_partitions=cpus,
         **cfg_kw,
     )
-    res = run_crawl(spark, pages, seeds, cfg, workdir=workdir)
+    timing: dict = {}
+    res = run_crawl(spark, pages, seeds, cfg, workdir=workdir, timing=timing)
     n_scheduled = res.schedule.count()
     n_fetched = res.fetched.count()
     dt = time.perf_counter() - t0
@@ -146,6 +151,7 @@ def crawl_bench(spark, sf_dir: str, cpus: int = CPUS,
         "urls_scheduled_per_sec": n_scheduled / dt,
         "pages_fetched_per_sec": n_fetched / dt,
         "rounds": res.rounds,
+        "phases": {k: round(v, 2) for k, v in timing.items()},
         # seen-filter audit (CrawlResult.seen_filter): which dedup tier
         # actually engaged per round, and how many candidate rows the
         # bloom proved new (skipping the exact anti-join) — the driver-run
@@ -452,6 +458,32 @@ def bench_once(cpus: int, sf_dir: str) -> dict:
     }
 
 
+FULL_RESULT = "bench_full.json"
+
+
+def headline(full: dict, full_path: str) -> dict:
+    """The one-line summary of a ``bench_once`` result: the totals, the
+    box ceilings and each headline path's time, throughput and per-phase
+    seconds; the per-query times stay in the full result at
+    ``full_path``."""
+    def path(r: dict) -> dict:
+        keep = ("sec", "rounds", "urls_scheduled_per_sec", "pages_fetched_per_sec")
+        return {**{k: r[k] for k in keep if k in r}, "phases": r.get("phases", {})}
+
+    ops = {k: v for k, v in full["queries"].items() if k not in (
+        "frontier_round", "crawl_flagship", "crawl_flagship_bloom")}
+    return {
+        "metric": full["metric"], "value": full["value"], "unit": full["unit"],
+        "sf": full["sf"], "cpus": full["cpus"], "box": full["box"],
+        "queries_sec": round(sum(ops.values()), 3),
+        "n_queries": len(ops),
+        "frontier_round": path(full["frontier_round"]),
+        "crawl_flagship": path(full["crawl"]),
+        "crawl_flagship_bloom_sec": full["crawl_bloom"]["sec"],
+        "full": full_path,
+    }
+
+
 # Sized so per-level fixed driver cost (~10 s of job scheduling, codegen,
 # Arrow worker spin-up — identical at every parallelism level) is noise
 # against the CPU-bound round work, matching the billions-of-rows-per-round
@@ -617,4 +649,7 @@ if __name__ == "__main__":
     elif "--scaling" in sys.argv:
         scaling_report(SF_DIR)
     else:
-        print(json.dumps(bench_once(CPUS, SF_DIR)))
+        result = bench_once(CPUS, SF_DIR)
+        with open(FULL_RESULT, "w") as f:
+            json.dump(result, f, indent=1)
+        print(json.dumps(headline(result, os.path.abspath(FULL_RESULT))))

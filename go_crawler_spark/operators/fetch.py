@@ -40,7 +40,13 @@ count anyway, so no extra action is spent on the decision.
 and once url-only (the miss anti-join). Callers should NOT cache hits:
 the second pass is column-pruned down to the url at the scan, so the
 recompute is a cheap JVM-only join, while an on-heap cache of the full
-hit content (html+text) costs more in GC than the pruned rescan saves.
+hit content (html) costs more in GC than the pruned rescan saves.
+
+Only the fetched bytes and the capture's ``warc_ts`` leave the corpus:
+the page's extracted ``text`` and its ``lang`` stay there, and the
+crawl's pages sink joins them back at read time on the capture's
+(url, warc_ts) (plans/crawl.py ``_assemble_result``), so the fetched log
+holds no copy of the corpus's text.
 """
 
 from __future__ import annotations
@@ -51,14 +57,9 @@ from pyspark.sql import DataFrame, functions as F
 def fetch_hits(
     frontier: DataFrame, pages: DataFrame, broadcast_frontier: bool = True
 ) -> DataFrame:
-    """One corpus scan: frontier rows found in the corpus, with content."""
-    corpus = pages.select(
-        "url",
-        F.col("html").alias("_html"),
-        F.col("text").alias("_text"),
-        "lang",
-        "warc_ts",
-    )
+    """One corpus scan: frontier rows found in the corpus, with content
+    and the capture's timestamp."""
+    corpus = pages.select("url", F.col("html").alias("_html"), "warc_ts")
     if broadcast_frontier:
         return corpus.join(F.broadcast(frontier), on="url", how="inner")
     # billion-row round: shuffle-hash, build side = frontier (no sort-merge
@@ -73,8 +74,8 @@ def fetch_round(
     broadcast_frontier: bool = True,
 ) -> DataFrame:
     """Combine materialized ``hits`` with the frontier's misses and apply
-    the size gate. Returns frontier columns + (html, text, lang, warc_ts,
-    size, status)."""
+    the size gate. Returns frontier columns + (html, warc_ts, size,
+    status)."""
     hit_urls = hits.select("url")
     if broadcast_frontier:
         hit_urls = F.broadcast(hit_urls)
@@ -83,8 +84,6 @@ def fetch_round(
     misses = (
         frontier.join(hit_urls, on="url", how="left_anti")
         .withColumn("_html", F.lit(None).cast("binary"))
-        .withColumn("_text", F.lit(None).cast("string"))
-        .withColumn("lang", F.lit(None).cast("string"))
         .withColumn("warc_ts", F.lit(None).cast("timestamp"))
     )
     joined = hits.unionByName(misses.select(*hits.columns))
@@ -97,7 +96,6 @@ def fetch_round(
         )
         # size gate: content never downloaded (main.go:324-330) → null out
         .withColumn("html", F.when(oversized | missing, F.lit(None)).otherwise(F.col("_html")))
-        .withColumn("text", F.when(oversized | missing, F.lit(None)).otherwise(F.col("_text")))
         .withColumn("size", F.coalesce(F.length(F.col("html")), F.lit(0)).cast("long"))
-        .drop("_html", "_text")
+        .drop("_html")
     )

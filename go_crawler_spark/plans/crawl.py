@@ -55,8 +55,9 @@ politeness/robots) runs three checkpoint steps:
                         one Python UDF) so the heavy html column crosses
                         the Python boundary exactly once and the fetched
                         log doubles as the pages sink (pages_out = pruned
-                        view); the round's child count rides it as an
-                        observed metric and picks J2's scheduler path;
+                        view ⋈ corpus metadata); the round's child count
+                        rides it as an observed metric and picks J2's
+                        scheduler path;
   J2  enqueue write   — depth gate → within-round first-writer dedup
                         (map-side min_by; on small rounds the ordered
                         pass below does it) → exact anti-join vs seen
@@ -103,6 +104,7 @@ count IS the runtime.
 
 from __future__ import annotations
 
+import functools
 import time
 from dataclasses import dataclass, field
 from typing import Iterator, List, Optional
@@ -153,7 +155,10 @@ GATE_SKIPS = ("skipped_trap", "skipped_robots", "skipped_redirect")
 class CrawlResult:
     schedule: DataFrame   # url kind depth seq host enqueue_round (admitted only)
     fetched: DataFrame    # url kind depth seq host round status size
-    pages_out: DataFrame  # url warc_ts html text lang status save_path kind depth round
+    # url warc_ts html text lang status save_path kind depth round: the
+    # fetched log's view left-joined to the corpus capture each page
+    # fetched (text and lang are read from the corpus, lazily)
+    pages_out: DataFrame
     metrics: DataFrame    # round pages_crawled pages_failed links_discovered assets_found bytes_downloaded
     seen: DataFrame       # url
     rounds: int
@@ -791,7 +796,9 @@ def _fetch(fetch_now: DataFrame, pages: DataFrame, cfg: CrawlConfig,
     deliberately NOT persisted). Under redirects the request goes to the
     row's target: the join runs on ``_fetch_url``/``_fetch_host`` in place
     of ``url``/``host``, so the fetched log records the target's host, and
-    the row's own url identity is restored after it."""
+    the row's own url identity is restored after it; ``fetch_url`` records
+    the target where it differs from ``url`` (NULL otherwise): the pages
+    sink reads the target's text and lang."""
     if redirected:
         fetch_now = fetch_now.select(
             F.col("_fetch_url").alias("url"), "kind", "depth", "seq",
@@ -801,7 +808,9 @@ def _fetch(fetch_now: DataFrame, pages: DataFrame, cfg: CrawlConfig,
     hits = fetch_hits(fetch_now, pages, broadcast_frontier=bcast)
     fetched = fetch_round(fetch_now, hits, cfg.max_file_size, broadcast_frontier=bcast)
     if redirected:
-        fetched = fetched.withColumn("url", F.col("_orig_url")).drop("_orig_url")
+        fetched = fetched.withColumn(
+            "fetch_url", F.when(F.col("url") != F.col("_orig_url"), F.col("url"))
+        ).withColumn("url", F.col("_orig_url")).drop("_orig_url")
     return fetched
 
 
@@ -813,9 +822,11 @@ def _j1_fetch_parse(st: _CrawlState, io, cfg: CrawlConfig, pages: DataFrame,
     Arrow pass — the html column crosses the Python boundary once; assets
     skip parse, main.go:207; a skipped page parses to nothing). The
     fetched log doubles as the pages sink — pages_out is a column-pruned
-    view of these files, not a second copy. Returns the written log and
-    the round's child count, observed on the write (it sizes J2's
-    scheduler without a count job)."""
+    view of these files joined to the corpus's metadata, not a second
+    copy; of the corpus it stores only the fetched html and the
+    capture's warc_ts. Returns the written log and the round's child
+    count, observed on the write (it sizes J2's scheduler without a count
+    job)."""
     bcast = st.n_frontier <= cfg.broadcast_fetch_max_rows
     fetched = _fetch(fetch_now, pages, cfg, bcast, redirected).withColumn(
         "round", F.lit(st.rnd)
@@ -1054,16 +1065,54 @@ def run_crawl(
 
     t = time.perf_counter()
     release_pending_checkpoints()  # covers the pre-loop seeds path too
-    result = _assemble_result(spark, io, workdir, st.rnd)
+    result = _assemble_result(spark, io, workdir, st.rnd, pages)
     result.seen_filter = st.seen_filter
     _tick("assemble", t)
     return result
 
 
-def _assemble_result(spark: SparkSession, io, workdir: str, rounds: int) -> CrawlResult:
+def _pages_out(io, names: List[str], pages: DataFrame) -> DataFrame:
+    """S4/S5/T1 sink: the fetched log already holds the rewritten html and
+    save_path (fused into J1), so the sink table is a column-pruned VIEW
+    of those parquet files — zero extra copy, row-preserving skip (SURVEY
+    §3.2) included — left-joined to the corpus capture each row fetched,
+    (``coalesce(fetch_url, url)``, ``warc_ts``), for the page's ``text``
+    and ``lang``, which the fetched log does not copy. Only a page fetched
+    ok has text; an oversized one keeps its lang, a miss has no capture.
+    A (url, warc_ts) pair names one capture: a corpus holding two rows
+    with the same pair gives each fetched row of it both rows' metadata.
+
+    A round logged before the log stopped copying ``text`` and ``lang``
+    keeps its stored values (its redirected rows record no target)."""
+    cols = ("url", "warc_ts", "html", "text", "lang", "status", "kind",
+            "depth", "save_path", "round")
+    fetches = ~F.col("status").isin(*GATE_SKIPS)
+    stored = [n for n in names if "text" in io.schema(n).fieldNames()]
+    parts = [io.read(*stored).filter(fetches).select(*cols)] if stored else []
+    joined = [n for n in names if n not in stored]
+    if joined:
+        view = io.read(*joined).filter(fetches)
+        # fetch_url exists only where the crawl resolved redirects
+        key = (F.coalesce("fetch_url", "url") if "fetch_url" in view.columns
+               else F.col("url"))
+        meta = pages.select(F.col("url").alias("_src"),
+                            F.col("warc_ts").alias("_ts"), "text", "lang")
+        capture = (F.col("_key") == F.col("_src")) & F.col("warc_ts").eqNullSafe(F.col("_ts"))
+        parts.append(
+            view.select(*(c for c in cols if c not in ("text", "lang")), key.alias("_key"))
+            .join(meta, capture, "left")
+            .withColumn("text", F.when(F.col("status") == "ok", F.col("text")))
+            .select(*cols)
+        )
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def _assemble_result(spark: SparkSession, io, workdir: str, rounds: int,
+                     pages: DataFrame) -> CrawlResult:
     """Build the result tables from the per-round checkpoint logs — metrics
     in one job over the stored extraction arrays (M1 counter names from
-    internal/metrics.go:14-18)."""
+    internal/metrics.go:14-18) — and ``pages``, the corpus, from which
+    pages_out reads each page's metadata when a caller reads it."""
     enqueue = io.read(*io.list_names("enqueue_"))
     schedule = enqueue.filter(F.col("admitted")).select(
         "url", "kind", "depth", "seq", "host", "enqueue_round"
@@ -1073,23 +1122,13 @@ def _assemble_result(spark: SparkSession, io, workdir: str, rounds: int) -> Craw
     # no content); the pages sink and the metrics count fetches only
     fetched_names = io.list_names("fetched_")
     raw_fetched = io.read(*fetched_names) if fetched_names else None
-    fetched = None
+    fetched = pages_out = None
     if raw_fetched is not None:
         fetched = raw_fetched.select(
             "url", "kind", "depth", "seq", "host", "round", "status", "size"
         )
         raw_fetched = raw_fetched.filter(~F.col("status").isin(*GATE_SKIPS))
-
-    # S4/S5/T1 sink: the fetched log already holds the rewritten html and
-    # save_path (fused into J1), so the sink table is a column-pruned VIEW
-    # of those parquet files — zero extra copy, row-preserving skip
-    # (SURVEY §3.2) included.
-    pages_out = None
-    if raw_fetched is not None:
-        pages_out = raw_fetched.select(
-            "url", "warc_ts", "html", "text", "lang",
-            "status", "kind", "depth", "save_path", "round",
-        )
+        pages_out = _pages_out(io, fetched_names, pages)
 
     # metrics from the stored children arrays — zero-filled per round
     all_rounds = spark.range(rounds).select(F.col("id").cast("int").alias("round"))

@@ -43,9 +43,10 @@ def cdx_records(
     payload_col: str = "html",
 ) -> DataFrame:
     """(surt_key, ts14, url, digest, length) per capture — the CDX
-    columns. ``length`` counts payload octets; null payload indexes as
-    an empty capture (length 0), matching a failed-fetch log row."""
-    payload = F.coalesce(F.col(payload_col), F.lit(b""))
+    columns. ``length`` counts payload octets (a string payload is its
+    UTF-8 bytes, as in ``to_wet_records``); null payload indexes as an
+    empty capture (length 0), matching a failed-fetch log row."""
+    payload = F.coalesce(F.col(payload_col).cast("binary"), F.lit(b""))
     return pages.select(
         surt_key_expr(F.col(url_col)).alias("surt_key"),
         F.date_format(F.col(ts_col), "yyyyMMddHHmmss").alias("ts14"),

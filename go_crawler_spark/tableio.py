@@ -11,6 +11,7 @@ manifest — the round's commit point — by a temp file, ``fsync`` and
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -67,9 +68,14 @@ class ParquetTableIO:
         self.workdir = workdir
         os.makedirs(workdir, exist_ok=True)
         # schema of every table this instance published or has already
-        # read: a parquet read given its schema skips Spark's footer-
-        # inference job. Forgotten whenever the files behind a name change.
+        # read, seeded from the manifest's record: a parquet read given its
+        # schema skips Spark's footer-inference job. Forgotten whenever the
+        # files behind a name change.
         self._schemas: dict[str, StructType] = {}
+        for entry in (self._manifest_file() or {}).get("schemas", []):
+            schema = StructType.fromJson(entry["schema"])
+            for n in entry["tables"]:
+                self._schemas[n] = schema
 
     def _path(self, name: str) -> str:
         return os.path.join(self.workdir, name)
@@ -163,18 +169,25 @@ class ParquetTableIO:
                 os.rename(old, path)  # staged copy lost: restore the old
 
     def read(self, *names: str) -> DataFrame:
-        """Read one table, or the union of several with one schema. A
-        name first met here (the resume case) has its schema inferred
-        once, by one Spark job; every later read, and every read of a
-        table this instance wrote, launches none."""
+        """Read one table, or the union of several: one scan per distinct
+        schema, unioned by column name (a column some tables lack reads
+        NULL there). A table the manifest does not record (one written
+        before the manifest carried schemas) has its schema inferred once,
+        by one Spark job; every other read launches none."""
+        groups: dict[StructType, list[str]] = {}
         for n in names:
-            if n not in self._schemas:
-                self._schemas[n] = self.spark.read.parquet(self._path(n)).schema
-        paths = [self._path(n) for n in names]
-        schema = self._schemas[names[0]]
-        if any(self._schemas[n] != schema for n in names[1:]):
-            return self.spark.read.parquet(*paths)
-        return self.spark.read.schema(schema).parquet(*paths)
+            groups.setdefault(self.schema(n), []).append(self._path(n))
+        frames = [self.spark.read.schema(schema).parquet(*paths)
+                  for schema, paths in groups.items()]
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+
+    def schema(self, name: str) -> StructType:
+        """The table's schema: recorded, or inferred once by one Spark
+        job for a table the manifest does not record."""
+        if name not in self._schemas:
+            self._schemas[name] = self.spark.read.parquet(self._path(name)).schema
+        return self._schemas[name]
 
     def exists(self, name: str) -> bool:
         return os.path.isdir(self._path(name))
@@ -211,16 +224,34 @@ class ParquetTableIO:
             if d.endswith("._tmp"):
                 shutil.rmtree(os.path.join(self.workdir, d), ignore_errors=True)
 
-    def get_manifest(self) -> Optional[dict]:
+    def _manifest_file(self) -> Optional[dict]:
         p = os.path.join(self.workdir, "MANIFEST.json")
         if not os.path.exists(p):
             return None
         with open(p) as f:
             return json.load(f)
 
+    def get_manifest(self) -> Optional[dict]:
+        """The last published manifest, as the caller put it."""
+        man = self._manifest_file()
+        if man is not None:
+            man.pop("schemas", None)
+        return man
+
     def put_manifest(self, manifest: dict) -> None:
         """Publish the manifest atomically: a crash mid-write leaves the
-        previous manifest in place, never a truncated one."""
+        previous manifest in place, never a truncated one. It also records
+        the schema of every table in the workdir this instance knows,
+        grouped by schema, so a later instance reads them with no
+        inference job."""
+        groups: dict[StructType, list[str]] = {}
+        for n in self.list_names():
+            if n in self._schemas:
+                groups.setdefault(self._schemas[n], []).append(n)
+        manifest = dict(manifest, schemas=[
+            {"schema": schema.jsonValue(), "tables": names}
+            for schema, names in groups.items()
+        ])
         path = os.path.join(self.workdir, "MANIFEST.json")
         tmp = path + "._tmp"
         with open(tmp, "w") as f:

@@ -37,7 +37,8 @@ os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 def parse_args(argv=None) -> argparse.Namespace:
     p = argparse.ArgumentParser(description="PySpark crawl engine")
     p.add_argument("--corpus", help="parquet path of the pages table "
-                   "(url, warc_ts, html, text, lang); omit for synthetic")
+                   "(url, warc_ts, html, text, lang; one row per "
+                   "(url, warc_ts) capture); omit for synthetic")
     p.add_argument("--synthetic-pages", type=int, default=4800,
                    help="synthetic corpus size when --corpus is omitted")
     p.add_argument("--seeds", nargs="*", default=None, help="seed URLs")

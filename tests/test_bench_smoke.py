@@ -47,3 +47,38 @@ def test_frontier_round_smoke_budget(spark):
         f"frontier round took {fr['sec']:.1f}s (> {SMOKE_BUDGET_SEC}s smoke "
         f"budget) — bench harness or engine regression; phases: {fr['phases']}"
     )
+
+
+def test_headline_is_one_short_parseable_line():
+    """The last line ``bench.py`` prints is a compact JSON headline —
+    totals and both headline paths' per-phase seconds — short enough for
+    a log tail to hold it whole; every query's time stays in the full
+    result file."""
+    import json
+
+    import bench
+    import __spark_entry__ as em
+
+    phases = {p: 1.25 for p in ("seeds", "gate", "fetch_extract", "enqueue",
+                                "absorb", "assemble")}
+    path = {"sec": 33.871, "urls_scheduled": 89812, "urls_fetched": 89812,
+            "urls_scheduled_per_sec": 2651.601, "pages_fetched_per_sec": 2651.601,
+            "rounds": 6, "phases": phases}
+    full = {
+        "metric": "total_headline_seconds", "value": 321.5, "unit": "sec",
+        "queries": {"frontier_round": 35.6, "crawl_flagship": 33.9,
+                    "crawl_flagship_bloom": 32.5,
+                    **{name: 1.234 for name in em.queries()}},
+        "sf": "0.1", "cpus": 32,
+        "box": {"cpu_ceiling_2_8": 0.951, "membw_ceiling_2_8": 0.311},
+        "frontier_round": path, "crawl": path, "crawl_bloom": path,
+    }
+    n_ops = len(set(em.queries()) - {"frontier_round", "crawl_flagship",
+                                     "crawl_flagship_bloom"})
+    line = json.dumps(bench.headline(full, "/some/dir/bench_full.json"))
+    assert "\n" not in line and len(line) <= 1500, len(line)
+    head = json.loads(line)
+    assert head["value"] == 321.5 and head["n_queries"] == n_ops
+    assert head["queries_sec"] == round(1.234 * n_ops, 3)
+    for key in ("frontier_round", "crawl_flagship"):
+        assert head[key]["phases"] == phases and head[key]["sec"] == 33.871

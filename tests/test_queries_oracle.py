@@ -5,10 +5,11 @@ twin at sf0.001 and require identical row-count + column names + values
 
 from __future__ import annotations
 
-import math
 import os
+from typing import Optional
 
 import duckdb
+import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -29,20 +30,44 @@ def ducks():
     return con
 
 
-def _normalize_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        if v == 0.0:
-            return 0.0  # collapse -0.0
-        return round(v, 9)
-    return v
+def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The canonical form the correctness gate compares: columns by name,
+    integers as int64 and timestamps as datetime64[ns] (the width and
+    unit each engine picks are not part of the answer), floats rounded to
+    9 places with -0.0 collapsed to 0.0, rows ordered by ``sort_values``
+    over every column. A column's kind is kept as the engine delivered
+    it, so an integer that one side delivers as float64 (a DuckDB HUGEINT
+    ``sum()``) stays visible, and a list or map cell fails the sort (a
+    pandas sort cannot order such cells)."""
+    pdf = pdf[sorted(pdf.columns)].copy()
+    for c in pdf.columns:
+        kind = pdf[c].dtype.kind
+        if kind in "iu":
+            pdf[c] = pdf[c].astype("int64")
+        elif kind == "M":
+            pdf[c] = pdf[c].astype("datetime64[ns]")
+        elif kind == "f":
+            pdf[c] = pdf[c].round(9) + 0.0
+    return pdf.sort_values(list(pdf.columns), ignore_index=True)
 
 
-def _canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_normalize_cell(r[i]) for i in order) for r in rows]
-    return sorted(out, key=lambda t: tuple(str(x) for x in t))
+def _mismatch(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> Optional[str]:
+    """Why the engine's frame and the oracle's differ (None if they
+    match): column names, row count, a column's dtype after ``_canon``,
+    or the row hashes of the canonical frames."""
+    if sorted(spark_pdf.columns) != sorted(duck_pdf.columns):
+        return f"columns {sorted(spark_pdf.columns)} vs {sorted(duck_pdf.columns)}"
+    if len(spark_pdf) != len(duck_pdf):
+        return f"row count {len(spark_pdf)} vs {len(duck_pdf)}"
+    a, b = _canon(spark_pdf), _canon(duck_pdf)
+    for c in a.columns:
+        if a[c].dtype != b[c].dtype:
+            return f"column {c}: dtype {a[c].dtype} vs {b[c].dtype}"
+    ha = pd.util.hash_pandas_object(a, index=False)
+    hb = pd.util.hash_pandas_object(b, index=False)
+    if not (ha.values == hb.values).all():
+        return "values differ"
+    return None
 
 
 ORACLED = sorted(entry_mod.oracle_sql().keys())
@@ -51,18 +76,10 @@ ROWS_ONLY = sorted(set(entry_mod.queries().keys()) - set(ORACLED))
 
 @pytest.mark.parametrize("name", ORACLED)
 def test_oracle_match(spark, ducks, name):
-    q = entry_mod.queries()[name]
-    sdf = q(spark, SF_SMALL)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    rel = ducks.sql(entry_mod.oracle_sql()[name])
-    dcols = list(rel.columns)
-    drows = rel.fetchall()
-
-    assert sorted(scols) == sorted(dcols), f"{name}: column names differ"
-    assert len(srows) == len(drows), f"{name}: row count {len(srows)} vs {len(drows)}"
-    assert _canon(srows, scols) == _canon(drows, dcols), f"{name}: values differ"
+    spdf = entry_mod.queries()[name](spark, SF_SMALL).toPandas()
+    dpdf = ducks.sql(entry_mod.oracle_sql()[name]).df()
+    why = _mismatch(spdf, dpdf)
+    assert why is None, f"{name}: {why}"
 
 
 def test_delay_oracle_integer_column(ducks):
@@ -80,6 +97,32 @@ def test_inverted_index_postings_are_strings(ducks):
     assert len(pdf) and all(isinstance(v, str) for v in pdf["postings"])
     assert all(v.split(",") == sorted(v.split(","), key=int)
                for v in pdf["postings"])
+
+
+def test_canon_flags_float_aggregates_and_list_cells(ducks):
+    """The gate fails an oracle whose integer aggregate reaches pandas as
+    float64 (DuckDB's HUGEINT ``sum()``) and an output with list cells,
+    the two ways an oracle has failed the correctness gate while matching
+    row by row; an integer width or a timestamp unit alone is no
+    failure."""
+    engine = pd.DataFrame({"k": [1, 2], "s": [3, 4]})
+    hugeint = ducks.sql(
+        "SELECT k, sum(v) AS s FROM (VALUES (1, 1), (1, 2), (2, 4)) t(k, v) GROUP BY k"
+    ).df()
+    assert str(hugeint["s"].dtype) == "float64"
+    assert _mismatch(engine, hugeint) == "column s: dtype int64 vs float64"
+    cast = ducks.sql("SELECT k, CAST(sum(v) AS BIGINT) AS s FROM "
+                     "(VALUES (1, 1), (1, 2), (2, 4)) t(k, v) GROUP BY k").df()
+    assert _mismatch(engine, cast) is None
+    assert _mismatch(engine.astype({"s": "int32"}), cast) is None
+
+    lists = ducks.sql("SELECT 1 AS k, [1, 2] AS s UNION ALL SELECT 2, [3]").df()
+    with pytest.raises(TypeError):
+        _mismatch(lists, lists)
+
+    ts = pd.DataFrame({"t": pd.to_datetime(["2024-01-01", "2024-01-02"])})
+    assert _mismatch(ts.astype("datetime64[us]"), ts.astype("datetime64[ns]")) is None
+    assert _mismatch(ts, ts.iloc[::-1]) is None
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)

@@ -37,12 +37,12 @@ PLAIN_ROUNDS, PLAIN_JOBS = 4, 25
 # verdicts; J2 2; J3 absorb 1). The next frontier is a read of gate_<r>
 # and enqueue_<r+1>, not a write.
 POLITE_ROUNDS, POLITE_JOBS = 2, 23
-# resume of that checkpoint for 2 more rounds: 5 before the loop (4
-# schema inferences, one per table the resume meets first: enqueue_0-2
-# and gate_1; the filter rebuild 1; no count() and no frontier write:
-# the manifest holds the seen-row count and the frontier size) + 2 x 11
-# + 2 schema inferences when the result reads fetched_0/1
-RESUME_ROUNDS, RESUME_JOBS = 4, 29
+# resume of that checkpoint for 2 more rounds: 1 before the loop (the
+# filter rebuild; no schema inference: the manifest records every table's
+# schema; no count() and no frontier write: it also holds the seen-row
+# count and the frontier size) + 2 x 11; the result reads fetched_0-3
+# with no inference either
+RESUME_ROUNDS, RESUME_JOBS = 4, 23
 
 
 @pytest.fixture(scope="module")

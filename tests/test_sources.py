@@ -166,6 +166,32 @@ def test_cdxj_payload_is_json_for_control_characters(spark, tmp_path):
     assert sorted(oracle) == sorted(lines)
 
 
+def test_cdx_length_counts_octets_of_a_string_payload(spark, tmp_path):
+    """A string payload's length is its UTF-8 octets (``é`` 2, ``€`` 3),
+    not its characters, in the engine and in the DuckDB oracle alike."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry_mod
+    from go_crawler_spark.sources.cdx import cdx_records
+
+    docs = pd.DataFrame({"doc_id": [0, 1], "source": ["s", "s"], "text": ["é", "€"]})
+    recs = cdx_records(spark.createDataFrame(docs.assign(
+        url=["https://a/0", "https://a/1"], warc_ts=pd.Timestamp("2024-01-01"))),
+        payload_col="text").collect()
+    assert {r["url"]: r["length"] for r in recs} == {"https://a/0": 2, "https://a/1": 3}
+
+    docs.to_parquet(tmp_path / "documents.parquet")
+    lines = sorted(r["cdxj"] for r in
+                   entry_mod.queries()["cdx_index_lines"](spark, str(tmp_path)).collect())
+    assert [line.rsplit(" ", 1)[1] for line in lines] == ["2}", "3}"]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    oracle = [r[0] for r in con.execute(
+        f"SELECT cdxj FROM ({entry_mod.oracle_sql()['cdx_index_lines']})").fetchall()]
+    assert sorted(oracle) == lines
+
+
 def test_cdxj_line_golden_and_sorted_write_shape(spark):
     """CDXJ golden line (fixed key order, octet length, md5 digest) and
     the global-order discipline: repartitionByRange + sortWithinPartitions

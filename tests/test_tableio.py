@@ -142,16 +142,34 @@ def test_read_of_own_table_launches_no_job_and_tracks_schema(spark, io):
 
 
 def test_read_infers_unknown_tables_once(spark, io):
-    """Tables written by another instance (the resume case) are inferred
-    on first read only; a union of tables whose schemas differ still
-    reads (inferred, as before)."""
+    """Tables written by another instance and absent from the manifest
+    are inferred on first read only; a union of tables whose schemas
+    differ reads by column name, NULL where a table lacks the column."""
     io.write(spark.range(3), "a_0")
     io.write(spark.range(2).withColumn("y", F.lit(1)), "b_0")
     other = ParquetTableIO(spark, io.workdir)
     df, jobs = _read_jobs(spark, other, "a_0")
     assert jobs == 1 and df.count() == 3
     assert _read_jobs(spark, other, "a_0")[1] == 0
-    assert other.read("a_0", "b_0").count() == 5
+    both, jobs = _read_jobs(spark, other, "a_0", "b_0")
+    assert jobs == 1 and both.columns == ["id", "y"]
+    assert sorted(((r["id"], r["y"]) for r in both.collect()), key=repr) == [
+        (0, 1), (0, None), (1, 1), (1, None), (2, None)]
+
+
+def test_manifest_records_schemas_for_the_next_instance(spark, io):
+    """put_manifest records the schema of every table the instance knows,
+    so an instance opened on the workdir later (the resume) reads them
+    with no inference job; get_manifest returns the caller's dict."""
+    io.write(spark.range(3), "a_0")
+    io.write(spark.range(2).withColumn("y", F.lit("v")), "b_0")
+    io.write(spark.range(4), "a_1")
+    io.put_manifest({"round": 0})
+    assert io.get_manifest() == {"round": 0}
+    other = ParquetTableIO(spark, io.workdir)
+    df, jobs = _read_jobs(spark, other, "a_0", "a_1", "b_0")
+    assert jobs == 0 and df.columns == ["id", "y"]
+    assert df.count() == 9
 
 
 def test_multi_read_unions(spark, io):

@@ -3,7 +3,8 @@
 scale factor (default sf0.01, the scale the driver grades at — the pytest
 replica in tests/test_queries_oracle.py runs at sf0.001 for speed). Runs
 every ``__spark_entry__.queries()`` entry against its DuckDB
-``oracle_sql()`` twin and reports rows/schema/values matches.
+``oracle_sql()`` twin and reports each mismatch (columns, row count,
+dtype, values) through the same canonicalizer as the pytest replica.
 
 Run: python tools/oracle_check.py [sf_dir]
 """
@@ -23,7 +24,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as em
-    from tests.test_queries_oracle import TABLES, _canon
+    from tests.test_queries_oracle import TABLES, _mismatch
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -43,18 +44,13 @@ def main() -> int:
     bad = []
     for name in sorted(qs):
         try:
-            sdf = qs[name](spark, sf_dir)
-            scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
-            rel = con.sql(oracles[name])
-            dcols, drows = list(rel.columns), rel.fetchall()
-            rows_ok = len(srows) == len(drows)
-            schema_ok = sorted(scols) == sorted(dcols)
-            vals_ok = rows_ok and schema_ok and _canon(srows, scols) == _canon(drows, dcols)
-            status = "OK" if (rows_ok and schema_ok and vals_ok) else "FAIL"
-            if status == "FAIL":
+            spdf = qs[name](spark, sf_dir).toPandas()
+            dpdf = con.sql(oracles[name]).df()
+            why = _mismatch(spdf, dpdf)
+            if why is not None:
                 bad.append(name)
-            print(f"{status:4} {name:32} rows={len(srows)}/{len(drows)} "
-                  f"schema={schema_ok} values={vals_ok}")
+            print(f"{'OK' if why is None else 'FAIL':4} {name:32} "
+                  f"rows={len(spdf)}/{len(dpdf)} {why or ''}")
         except Exception as exc:  # noqa: BLE001 - report and continue
             bad.append(name)
             print(f"ERR  {name:32} {type(exc).__name__}: {str(exc)[:120]}")
